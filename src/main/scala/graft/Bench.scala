@@ -18,8 +18,15 @@ package graft
   * suite CONTEXT, not plan changes: 181 codegen-heavy plans in one JVM
   * accumulate generated classes, JIT churn, and old-gen garbage that
   * in-JVM resets (clearCache + System.gc + 1g code cache) provably did
-  * not fully cancel. A fresh JVM per family is the only reset that
-  * removes all three at once; families keep the fork count at ~10
+  * not fully cancel. A fourth cause was codegen cache THRASH: Spark's
+  * JVM-wide cache of generated classes held 100 entries by default,
+  * while one family's warm-up pass alone compiles 1,044 distinct
+  * classes (q family, sf0.001), so each plan's classes were evicted
+  * before its next run and every timed run recompiled them.
+  * [[GraftSession.CodegenCacheMaxEntries]] now sizes the cache above a
+  * family's working set, which removes that cause inside a JVM. A fresh
+  * JVM per family is still the only reset that removes the other three
+  * at once; families keep the fork count at ~10
   * (startup ≈ 15 s each) instead of 181. Child JVMs are launched with
   * THIS JVM's exact flags (RuntimeMXBean.getInputArguments) and
   * classpath, so --add-opens / heap / code-cache settings stay in sync
@@ -180,7 +187,13 @@ object Bench {
     // plan's generated code is compiled and JIT'd before timing. A cold
     // first run costs 3-8x the steady state (codegen compile + C2), which
     // measures the JVM, not the plan; sf0.001 makes the warmup pass cheap
-    // regardless of the target SF.
+    // regardless of the target SF. This holds only because the codegen
+    // cache (GraftSession.CodegenCacheMaxEntries) covers a family's whole
+    // working set: at Spark's default 100 entries the later queries of
+    // the pass evicted the earlier ones' classes (cache thrash), so each
+    // timed run recompiled them anyway. Plans whose physical shape
+    // differs at the target SF (an AQE join choice) still compile on
+    // their first timed run, which min-of-N keeps out of the result.
     val warmDir = {
       val small = "/root/testdata/sf0.001"
       if (new java.io.File(small).isDirectory) small else sfDir

@@ -25,6 +25,27 @@ object GraftSession {
       // testdata events.ts is TIMESTAMP(NANOS), which Spark's parquet
       // reader rejects natively; read as long and convert in Tables.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheMaxEntries.toString)
+
+  /** Capacity of Spark's JVM-wide cache of generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, 100 by default). graft
+    * re-plans the same queries over and over: every epoch of a streaming
+    * maintainer, every pass of a bench family, every spec in the test
+    * JVM. A working set larger than the cache is recompiled on every
+    * run, at ~9–13 ms per class. The largest recurring working set is one
+    * warm-up pass of the largest `Bench` family (q, 58 queries at
+    * sf0.001): 1,044 distinct classes, of which the default cache kept
+    * so few that its second pass recompiled 1,234. One cycle of
+    * maintainer #13's epoch plus the h09 + q47 query pass is ~145.
+    * Guava evicts LRU per segment (four segments of size/4), so the
+    * cache needs headroom over the working set, not just a larger size;
+    * 2000 is ~2× the q family, and its second pass then compiles only
+    * the ~50 classes whose code differs from run to run. Spark reads the
+    * value once, when the first session in the JVM generates code, so a
+    * JVM that builds sessions outside this builder must set the same
+    * value. */
+  val CodegenCacheMaxEntries: Int = 2000
 
   def defaultCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)

@@ -19,14 +19,28 @@ package graft.operators
   * The pool is unbounded but callers only ever park one background
   * chain at a time (2 jobs in flight is enough to fill scheduling
   * gaps, per §2.6); threads are daemons so a dying driver never hangs
-  * on them. */
+  * on them.
+  *
+  * Thread-local contract: pool threads are built WITHOUT inheritable
+  * thread-locals, and a cached pool reuses them across unrelated calls,
+  * so a background thunk runs with no active SparkSession and no
+  * SparkContext local properties (job group, job description, scheduler
+  * pool) — not the caller's, and not those of whichever caller happened
+  * to spawn the thread. A thunk must therefore work only on what it
+  * captures (DataFrames and their `sparkSession`): `SparkSession.active`
+  * there resolves to the default session, and the caller's
+  * `cancelJobGroup` does not reach the background chain's jobs. Spark's
+  * own per-action settings (the SQL execution id, the action's active
+  * session) are set and restored around each action, so they leave a
+  * reused thread as clean as a fresh one. */
 private[graft] object ParActions {
   private lazy val pool = scala.concurrent.ExecutionContext.fromExecutorService(
     java.util.concurrent.Executors.newCachedThreadPool(
       new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger(0)
         def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-par-action-${n.getAndIncrement()}")
+          val t = new Thread(null, r, s"graft-par-action-${n.getAndIncrement()}",
+            0L, false) // inheritThreadLocals = false: see the contract above
           t.setDaemon(true)
           t
         }

@@ -2455,6 +2455,13 @@ object RelationalOps {
     * (q39's loop discipline, d8's storage release). */
   private[operators] val Q47MaxRounds = 16
   private[operators] val Q47StepsPerAction = 4
+  // The superstep loop advances in whole blocks and may accept a
+  // fix-point anywhere inside the last one, while the driver arm stops
+  // hard at Q47MaxRounds: the two arms share a round cap only when the
+  // block size divides it.
+  require(Q47MaxRounds % Q47StepsPerAction == 0,
+    s"Q47MaxRounds ($Q47MaxRounds) must be a multiple of " +
+      s"Q47StepsPerAction ($Q47StepsPerAction)")
 
   /** q47's standing symmetric co-purchase edges, bucketed by u. The
     * basket-cap truncation count is persisted ALONGSIDE the edges

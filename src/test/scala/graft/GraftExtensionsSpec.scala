@@ -21,6 +21,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .appName("graft-ext-spec")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
+      // the JVM-wide codegen cache is sized by the first session that
+      // generates code; if this suite runs first it must not pin it at
+      // Spark's default (see CodegenCacheSpec)
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheMaxEntries.toString)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
