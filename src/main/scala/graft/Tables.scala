@@ -8,10 +8,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * take the sfDir as a parameter so the same code runs at any scale factor
   * (sf0.001 smoke → sf0.1 bench → a real 100 TB lake: the path is the only
   * thing that changes; the plans are declarative and partition-parallel).
+  *
+  * Every read hands the reader the table's parquet schema from a
+  * per-session cache ([[schemaOf]]). Inferring a schema is one Spark job
+  * per table, and [[registerViews]] reads all ten tables for every
+  * SQL-frontend query: without the cache, 10 of h09's 21 jobs per run
+  * were schema jobs, and building its DataFrame took ≈1160 of its
+  * ≈1750 ms (sf0.01, `local[2]`, 4-core VM).
   */
 object Tables {
   import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+  import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
   /** TPC-H-ish star schema + events stream table + LLM-pipeline tables. */
   val all: Seq[String] = Seq(
@@ -71,11 +78,45 @@ object Tables {
     else df
   }
 
+  /** A file version under one session's parquet settings: the qualified
+    * path, its length and modification time, and the session's explicitly
+    * set confs whose name mentions parquet (they steer how a footer maps
+    * to Spark types, e.g. `spark.sql.legacy.parquet.nanosAsLong`). */
+  private final case class SchemaKey(path: String, length: Long,
+                                     modified: Long, confs: Map[String, String])
+
+  /** Inferred schemas per session. Per session, not JVM-wide: sessions
+    * differ in the confs inference depends on (a `newSession()` starts
+    * from the SparkContext's confs, not its parent's runtime settings). Weak keys let a dropped session's
+    * entries go with it. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]]())
+
+  /** The schema `spark.read.parquet(path)` would infer, inferred once per
+    * session and file version (one Hadoop `getFileStatus` per call keys
+    * it). Overwriting the file changes its length or modification time,
+    * so the next read infers again. A directory (a multi-file dataset) is
+    * not cached: its own status does not change when a file inside it is
+    * rewritten. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    if (!st.isFile) return spark.read.parquet(path).schema
+    val key = SchemaKey(st.getPath.toString, st.getLen, st.getModificationTime,
+      spark.conf.getAll.filter(_._1.contains("parquet")))
+    schemas.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]())
+      .computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val raw = spark.read.schema(schemaOf(spark, path)).parquet(path)
     val df =
       if (leaveAlone(name)) raw
-      else restoreParallelism(spark, raw, s"$sfDir/$name.parquet")
+      else restoreParallelism(spark, raw, path)
     // Normalize events.ts across driver testdata generations: older data
     // is TIMESTAMP(NANOS) parquet, which Spark reads as raw nanos
     // (spark.sql.legacy.parquet.nanosAsLong, set in GraftSession) —
@@ -90,7 +131,9 @@ object Tables {
     else df
   }
 
-  /** Register every table as a temp view (for spark.sql / SQL tests). */
+  /** Register every table as a temp view (for spark.sql / SQL tests).
+    * Re-registered on every call, never once per session: a view built
+    * earlier would keep an older file listing after the inputs change. */
   def registerViews(spark: SparkSession, sfDir: String): Unit =
     all.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
 }

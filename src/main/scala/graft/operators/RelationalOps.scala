@@ -2452,8 +2452,15 @@ object RelationalOps {
     * (v, lost) loss counts — bounded by the dying fringe — shuffle.
     * Supersteps run [[Q47StepsPerAction]]-per-action with lazily
     * checkpointed vertex frames and ONE change-count collect per block
-    * (q39's loop discipline, d8's storage release). */
-  private[operators] val Q47MaxRounds = 16
+    * (q39's loop discipline, d8's storage release).
+    *
+    * The cap counts peel steps, including the zero-kill step that
+    * confirms the fix-point. Over the benchmark generator's sf0.01
+    * tables (`perfbench/gen.py`, seeds 901–940) the peel reached its
+    * fix-point in 5–14 steps on 39 seeds and in 20 on one, which the
+    * old cap of 16 aborted; 32 leaves headroom. [[q47KCoreSql]] unrolls
+    * to the same cap. */
+  private[operators] val Q47MaxRounds = 32
   private[operators] val Q47StepsPerAction = 4
   // The superstep loop advances in whole blocks and may accept a
   // fix-point anywhere inside the last one, while the driver arm stops
@@ -2943,7 +2950,12 @@ object RelationalOps {
     * same integer degree vector from the collected edges — identical
     * by the caller contract (deg IS the new graph's degree vector),
     * spec-asserted against the distributed arm including orientation
-    * ties. */
+    * ties.
+    *
+    * Not lazy: the two size probes below are Spark jobs that run when
+    * this method builds the plan, so EXPLAIN and plan-only callers (and
+    * the streaming `store.transact` body) launch them even if the
+    * returned frame never executes. */
   private[graft] def q48DeltaTrianglesWithDeg(edOld: DataFrame,
       delta: DataFrame, deg: DataFrame,
       driverBound: Int = DriverTriBound): DataFrame = {
@@ -3013,6 +3025,20 @@ object RelationalOps {
     oldRows.foreach { case (a, b) => edSet(i) = (a << 32) | b; i += 1 }
     deltaRows.foreach { case (a, b) => edSet(i) = (a << 32) | b; i += 1 }
     java.util.Arrays.sort(edSet)
+    // The caller contract (canonical a < b, no duplicate, delta disjoint
+    // from the old edges) is what makes the counting below exact: the
+    // distributed arm's sorted-triple DISTINCT would absorb a repeated
+    // edge, this arm would count its triangles twice. Ids are < 2³¹, so
+    // the packed order is the (a, b) order and one pass checks it all.
+    i = 0
+    while (i < m) {
+      val e = edSet(i)
+      require((e >>> 32) < (e & 0xFFFFFFFFL),
+        s"q48: edge (${e >>> 32}, ${e & 0xFFFFFFFFL}) is not canonical (a < b)")
+      require(i == 0 || edSet(i - 1) < e,
+        s"q48: duplicate edge (${e >>> 32}, ${e & 0xFFFFFFFFL})")
+      i += 1
+    }
     def degOf(v: Long): Long = {
       // count of und rows with src = v: range [v<<32, v<<32 | max-dst]
       // (the closed upper key cannot overflow for v < 2³¹, unlike

@@ -70,10 +70,10 @@ class Round10OpsSpec extends AnyFunSuite {
 
   test("q47: a peel that cannot converge within the cap throws") {
     import spark.implicits._
-    // path graph 0-1-2-...-43 with k=2: endpoints die one layer per
-    // round, needing ~21 rounds > Q47MaxRounds=16 — the capped loop
+    // path graph 0-1-2-...-99 with k=2: endpoints die one layer per
+    // round, needing 50 rounds > Q47MaxRounds=32 — the capped loop
     // must throw, never return the partial peel labeled as a k-core
-    val ed = (0L until 43L).map(i => (i, i + 1))
+    val ed = (0L until 99L).map(i => (i, i + 1))
     val sym = (ed ++ ed.map(_.swap)).toDF("u", "v")
     val e = intercept[IllegalStateException] {
       RelationalOps.q47KCoreFrom(sym, 2L).collect()
@@ -236,12 +236,29 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(driverArm == loopArm)
     assert(driverArm.nonEmpty)
     // and the non-convergence contract holds on the DRIVER arm too:
-    // 44-node path graph at k=2 peels one layer per round > Q47MaxRounds
-    val path = (0L until 43L).map(i => (i, i + 1))
+    // 100-node path graph at k=2 peels one layer per round > Q47MaxRounds
+    val path = (0L until 99L).map(i => (i, i + 1))
     val psym = (path ++ path.map(_.swap)).toDF("u", "v")
     val e = intercept[IllegalStateException] {
       RelationalOps.q47KCoreFrom(psym, 2L, 1000000).collect()
     }
     assert(e.getMessage.contains("did not converge"))
+  }
+
+  test("q47: a peel needing 25 rounds converges, identically on both arms") {
+    import spark.implicits._
+    // a triangle with a 24-node tail: at k=2 the tail dies one node per
+    // round from its tip, round 25 kills nobody — more rounds than the
+    // old cap of 16, fewer than Q47MaxRounds
+    val triangle = Seq((0L, 1L), (1L, 2L), (0L, 2L))
+    val tail = (0L +: (20L until 44L)).sliding(2).map(p => (p(0), p(1))).toSeq
+    val ed = triangle ++ tail
+    val sym = (ed ++ ed.map(_.swap)).toDF("u", "v")
+    def run(bound: Int) = RelationalOps.q47KCoreFrom(sym, 2L, bound)
+      .collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
+    val driverArm = run(1000000)
+    assert(driverArm == Seq((0L, 2L, 2L, 25), (1L, 2L, 2L, 25), (2L, 2L, 2L, 25)))
+    assert(run(0) == driverArm) // forced superstep loop
   }
 }

@@ -274,6 +274,25 @@ class Round9bOpsSpec extends AnyFunSuite {
     assert(driverArm.nonEmpty)
   }
 
+  test("q48: the driver probe arm rejects a duplicate or non-canonical edge") {
+    import spark.implicits._
+    // the distributed close's DISTINCT would hide a repeated edge; the
+    // driver arm would count its triangles twice, so it must refuse it
+    val edOld = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    def deltaRun(delta: Seq[(Long, Long)]) = {
+      val d = delta.toDF("a", "b")
+      val edNew = edOld.unionByName(d)
+      val deg = edNew.unionByName(edNew.select($"b".as("a"), $"a".as("b")))
+        .groupBy($"a".as("n")).agg(count(lit(1)).as("d"))
+      RelationalOps.q48DeltaTrianglesWithDeg(edOld, d, deg, 1000000).collect()
+    }
+    assert(deltaRun(Seq((1L, 3L))).length == 3) // the contract holds: one triangle
+    val dup = intercept[IllegalArgumentException](deltaRun(Seq((1L, 3L), (2L, 3L))))
+    assert(dup.getMessage.contains("duplicate edge (2, 3)"))
+    val flipped = intercept[IllegalArgumentException](deltaRun(Seq((3L, 1L))))
+    assert(flipped.getMessage.contains("not canonical"))
+  }
+
   test("t23: document text never rides a shuffle") {
     val df = graft.SparkEntry.queries("t23_overlap_risk")(spark, sf)
     val exchanges = physical(df).collect {
