@@ -51,6 +51,8 @@ final case class EpochTables(snaps: Map[String, Seq[String]],
   *    without compensation logic. A replay of an ALREADY-committed
   *    batch is caught by the guard before any transaction opens: no
   *    epoch bump, no file churn (the true-no-op contract, spec-pinned).
+  *    [[guardedEpoch]] is that protocol, written once for every
+  *    content-guarded maintainer.
   *
   * Scale notes:
   *  - Snapshot reads stay single-bucketed-table reads at every epoch,
@@ -349,21 +351,25 @@ final class EpochStore(prefix: String, dir: String, tables: EpochTables) {
       require(tables.logs.contains(name), s"undeclared log $name")
       tname(name, s"d$epoch")
     }
+    // nb is read ONCE per transaction and recorded in the epoch pointer
+    // at commit — every table of an epoch shares the count restart
+    // adoption will re-declare
     def writeSnap(name: String, df: DataFrame): Unit =
-      write(snapName(name), df, tables.snaps(name))
+      writeTable(sp, snapName(name), df, tables.snaps(name), nb)
     def writeLogDelta(name: String, df: DataFrame): Unit =
-      write(logDeltaName(name), df, tables.logs(name))
-    private def write(t: String, df: DataFrame, buckets: Seq[String]): Unit =
-      if (buckets.nonEmpty)
-        // nb is read ONCE per transaction and recorded in the epoch
-        // pointer at commit — every table of an epoch shares the count
-        // restart adoption will re-declare
-        graft.sources.LayoutOps.writeBucketed(df, t, buckets, nb)
-      else {
-        graft.sources.LayoutOps.clearStaleLocation(sp, t)
-        df.write.mode("overwrite").format("parquet").saveAsTable(t)
-      }
+      writeTable(sp, logDeltaName(name), df, tables.logs(name), nb)
   }
+
+  /** Overwrite table `t` with `df`: bucketed on `buckets` into `nb`
+    * buckets, or plain parquet when `buckets` is `Nil`. */
+  private def writeTable(sp: SparkSession, t: String, df: DataFrame,
+      buckets: Seq[String], nb: Int): Unit =
+    if (buckets.nonEmpty)
+      graft.sources.LayoutOps.writeBucketed(df, t, buckets, nb)
+    else {
+      graft.sources.LayoutOps.clearStaleLocation(sp, t)
+      df.write.mode("overwrite").format("parquet").saveAsTable(t)
+    }
 
   /** Run `body` as epoch N+1 and commit. Every snap the store declares
     * must be (re)written by the body — reads at N+1 resolve ONLY
@@ -378,6 +384,38 @@ final class EpochStore(prefix: String, dir: String, tables: EpochTables) {
     val r = body(new Tx(sp, e + 1, nb))
     flip(sp, e + 1, b, batchId, nb)
     r
+  }
+
+  /** The replay-guarded epoch: how every content-guarded maintainer in
+    * [[StreamOps]] folds one batch, so that at-least-once delivery
+    * commits each batch exactly once.
+    *
+    *  - No committed epoch yet: `day1` runs as epoch 1.
+    *  - Otherwise `unseen` — the batch minus what committed state
+    *    already holds, the maintainer's own guard — is computed ONCE
+    *    (`localCheckpoint`, shared by the emptiness probe and the fold).
+    *    Empty means a re-delivered batch: a TRUE no-op — no transaction
+    *    opens, no epoch bump, no file churn. Otherwise `fold` gets the
+    *    unseen rows and runs as the next epoch.
+    *
+    * `unseen` is by-name: it reads committed state, so it is only
+    * evaluated once some epoch has committed. `crashBeforeCommit` is
+    * the test failpoint: [[EpochStore.InjectedCrash]] after the body's
+    * tables land, before the pointer flip. The guard's checkpoint is
+    * released on every path — commit, no-op and exception. */
+  def guardedEpoch(sp: SparkSession, crashBeforeCommit: Boolean)(
+      unseen: => DataFrame)(day1: Tx => Unit)(
+      fold: (Tx, DataFrame) => Unit): Unit = {
+    def epoch(body: Tx => Unit): Unit = transact(sp) { tx =>
+      body(tx)
+      if (crashBeforeCommit) throw new EpochStore.InjectedCrash
+    }
+    if (!exists(sp)) epoch(day1)
+    else {
+      val fresh = unseen.localCheckpoint()
+      try { if (!fresh.isEmpty) epoch(fold(_, fresh)) }
+      finally graft.operators.DedupOps.unpersistCheckpointed(fresh)
+    }
   }
 
   // ------------------------------------------------------- maintenance
@@ -414,24 +452,12 @@ final class EpochStore(prefix: String, dir: String, tables: EpochTables) {
     val next = e + 1
     val nb = graft.sources.LayoutOps.stateBuckets(sp)
     tables.logs.foreach { case (name, buckets) =>
-      val t = tname(name, s"b$next")
       val kept = logRetention.getOrElse(name,
         identity[DataFrame] _)(log(sp, name))
-      if (buckets.nonEmpty)
-        graft.sources.LayoutOps.writeBucketed(kept, t, buckets, nb)
-      else {
-        graft.sources.LayoutOps.clearStaleLocation(sp, t)
-        kept.write.mode("overwrite").format("parquet").saveAsTable(t)
-      }
+      writeTable(sp, tname(name, s"b$next"), kept, buckets, nb)
     }
     tables.snaps.foreach { case (name, buckets) =>
-      val t = tname(name, s"e$next")
-      if (buckets.nonEmpty)
-        graft.sources.LayoutOps.writeBucketed(snap(sp, name), t, buckets, nb)
-      else {
-        graft.sources.LayoutOps.clearStaleLocation(sp, t)
-        snap(sp, name).write.mode("overwrite").format("parquet").saveAsTable(t)
-      }
+      writeTable(sp, tname(name, s"e$next"), snap(sp, name), buckets, nb)
     }
     flip(sp, next, next, bid, nb)
     vacuum(sp, retain)

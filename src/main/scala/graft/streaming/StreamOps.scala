@@ -1,9 +1,10 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 
 /** Per-user running totals maintained by custom state. */
 final case class UserStats(user_id: Long, n_events: Long, total_value: Double,
@@ -44,8 +45,26 @@ final case class PathHit(user_id: Long, path: String)
   *
   * The reference is one-shot batch only (Boot.java:17-20); streaming is
   * north-star extension surface (Structured Streaming + JDBC sinks).
+  *
+  * The twelve standing-state maintainers (`xBatch`, run per micro-batch
+  * by `streamingX`) keep their state in [[EpochStore]]. Eleven guard on
+  * content: each states only its batch normalisation, its guard (the
+  * batch rows committed state has not seen), its day-1 write and its
+  * fold, and [[EpochStore.guardedEpoch]] runs the shared protocol —
+  * replayed batch = true no-op, atomic multi-table commit, crash
+  * failpoint, checkpoint release. The IVM maintainer's additive fold
+  * cannot reveal a replay, so it guards on the committed batchId
+  * instead.
   */
 object StreamOps {
+
+  /** The foreachBatch writer behind every `streamingX` maintainer and
+    * result sink: `f(batch, batchId)` once per micro-batch, in append
+    * mode. */
+  private def eachBatch(stream: DataFrame)(f: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    stream.writeStream.outputMode(OutputMode.Append)
+      .foreachBatch { (batch: Dataset[Row], id: Long) => f(batch.toDF(), id) }
 
   /** Tumbling-window counts/sums per event type with a watermark: late
     * events beyond `lateness` are dropped and state is bounded — the
@@ -428,11 +447,9 @@ object StreamOps {
     * instead of appending duplicate flag rows — spec-pinned. */
   def streamingNeardupIngest(docsStream: DataFrame, corpusBandTable: String,
                              sinkTable: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docsStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        neardupIngestBatch(batch.toDF(), id, corpusBandTable, sinkTable)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(docsStream)((batch, id) =>
+      neardupIngestBatch(batch, id, corpusBandTable, sinkTable))
 
   private[graft] def neardupIngestBatch(batch: DataFrame, batchId: Long,
       corpusBandTable: String, sinkTable: String): Unit = {
@@ -594,17 +611,16 @@ object StreamOps {
     * never duplicate them). */
   def streamingAnnServe(queryStream: DataFrame, dir: String,
                         sinkTable: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queryStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val sp = batch.sparkSession
-        val qs = batch.select("vec_id", "v").collect().toSeq
-          .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-        if (qs.nonEmpty)
-          idempotentSinkWrite(
-            graft.operators.SimilarityOps.s10ServeFrom(sp, dir, qs),
-            id, sinkTable)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(queryStream) { (batch, id) =>
+      val sp = batch.sparkSession
+      val qs = batch.select("vec_id", "v").collect().toSeq
+        .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
+      if (qs.nonEmpty)
+        idempotentSinkWrite(
+          graft.operators.SimilarityOps.s10ServeFrom(sp, dir, qs),
+          id, sinkTable)
+    }
 
   /** Streaming point-in-time enrichment — q38's SCD2 lookup as an
     * ONLINE operator: each micro-batch of events joins the dimension
@@ -627,20 +643,19 @@ object StreamOps {
     * its own partition. */
   def streamingPitEnrich(events: DataFrame, dimTable: String,
                          sinkTable: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val sp = batch.sparkSession
-        import sp.implicits._
-        val dim = sp.table(dimTable)
-        val enriched = batch.toDF().as("e")
-          .join(dim.as("d"),
-            $"e.user_id" === $"d.k" &&
-              $"e.ts" >= $"d.valid_from" && $"e.ts" < $"d.valid_to",
-            "left")
-          .select($"e.event_id", $"e.user_id", $"e.ts", $"d.seg_v")
-        idempotentSinkWrite(enriched, id, sinkTable)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(events) { (batch, id) =>
+      val sp = batch.sparkSession
+      import sp.implicits._
+      val dim = sp.table(dimTable)
+      val enriched = batch.as("e")
+        .join(dim.as("d"),
+          $"e.user_id" === $"d.k" &&
+            $"e.ts" >= $"d.valid_from" && $"e.ts" < $"d.valid_to",
+          "left")
+        .select($"e.event_id", $"e.user_id", $"e.ts", $"d.seg_v")
+      idempotentSinkWrite(enriched, id, sinkTable)
+    }
 
   /** Streaming day-2 GRAPH maintenance — q48's online dual (r9/r10
     * verdicts' open item): a stream of basket items `(o, p)` folds
@@ -658,14 +673,8 @@ object StreamOps {
     * order, so an order's lines never straddle a batch boundary (a
     * splitting feed would need per-order reassembly state upstream).
     * Under that contract the fold is exactly batch q48's: edges are
-    * canonical/deduped, the delta anti-join makes re-delivery of a
-    * whole batch a no-op (ΔE = ∅ → counts unchanged), so a replayed
-    * micro-batch after a restart is a TRUE no-op — spec-pinned.
-    *
-    * Both tables commit ATOMICALLY through [[EpochStore]] — the
-    * pointer flip after both land is the transaction (r11 verdict #5);
-    * a crash mid-write leaves readers on the previous epoch and the
-    * re-delivered batch overwrites the orphans. */
+    * canonical/deduped, and the guard is the edge set itself — ΔE =
+    * batch pairs ∖ committed edges, empty for a replayed batch. */
   private[graft] def trianglesBatch(batch: DataFrame, prefix: String,
       dir: String, crashBeforeCommit: Boolean = false): Unit = {
     val sp = batch.sparkSession
@@ -673,29 +682,18 @@ object StreamOps {
     val store = new EpochStore(prefix, dir, TrianglesTables)
     val pairs = graft.operators.RelationalOps
       .basketPairs(batch.select($"o", $"p").distinct()).distinct()
-    if (!store.exists(sp)) {
-      store.transact(sp) { tx =>
-        graft.operators.RelationalOps.q48InitState(
-          pairs, tx.logDeltaName("edges"), tx.snapName("tri"))
-        if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-      }
-    } else {
-      val edOld = store.log(sp, "edges")
-      val delta = pairs.join(edOld, Seq("a", "b"), "left_anti")
-        .localCheckpoint() // one compute for the guard probe and 3 uses
-      try {
-        // a replayed batch (restart re-delivery) has ΔE = ∅: a TRUE
-        // no-op — no transaction opens, no epoch bump, no file churn
-        if (!delta.isEmpty) store.transact(sp) { tx =>
-          val deltaTri = graft.operators.RelationalOps
-            .q48DeltaTriangles(edOld, delta)
-          tx.writeSnap("tri", store.snap(sp, "tri")
-            .unionByName(deltaTri.select($"n", $"dtri".as("tri")))
-            .groupBy($"n").agg(sum($"tri").as("tri")))
-          tx.writeLogDelta("edges", delta)
-          if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-        }
-      } finally graft.operators.DedupOps.unpersistCheckpointed(delta)
+    lazy val edOld = store.log(sp, "edges")
+    store.guardedEpoch(sp, crashBeforeCommit)(
+        pairs.join(edOld, Seq("a", "b"), "left_anti")) { tx =>
+      graft.operators.RelationalOps.q48InitState(
+        pairs, tx.logDeltaName("edges"), tx.snapName("tri"))
+    } { (tx, delta) =>
+      val deltaTri = graft.operators.RelationalOps
+        .q48DeltaTriangles(edOld, delta)
+      tx.writeSnap("tri", store.snap(sp, "tri")
+        .unionByName(deltaTri.select($"n", $"dtri".as("tri")))
+        .groupBy($"n").agg(sum($"tri").as("tri")))
+      tx.writeLogDelta("edges", delta)
     }
   }
 
@@ -704,11 +702,9 @@ object StreamOps {
 
   def streamingTriangles(basketStream: DataFrame, prefix: String,
                          dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    basketStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        trianglesBatch(batch.toDF(), prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(basketStream)((batch, _) =>
+      trianglesBatch(batch, prefix, dir))
 
   /** Streaming SCD2 dimension maintenance — q40's online dual, the
     * CDC shape every warehouse runs: a stream of dimension-change
@@ -722,19 +718,16 @@ object StreamOps {
     * close-join plans no exchange on the dimension side; only the
     * batch shuffles).
     *
-    * Re-delivery discipline: the digest is computed BEFORE the replay
-    * guard — a re-delivered batch collapses to exactly the rows its
-    * first delivery landed, and the anti-join on `(k, valid_from)`
-    * against the COMMITTED dimension then drops them all, so a replayed
-    * micro-batch after a restart is a TRUE no-op (no rewrite, no epoch
-    * bump — spec-pinned). Without the digest-first order, a replayed
-    * two-version key would re-apply its SUPERSEDED earlier version on
-    * top of the landed latest one.
+    * Guard: the digest is computed BEFORE the anti-join on
+    * `(k, valid_from)` against the committed dimension — a re-delivered
+    * batch collapses to exactly the rows its first delivery landed, so
+    * the guard drops them all. Without the digest-first order, a
+    * replayed two-version key would re-apply its SUPERSEDED earlier
+    * version on top of the landed latest one.
     *
     * The dimension is a single table, but it still publishes through
-    * [[EpochStore]]: the merge writes the NEXT epoch's bucketed table
-    * and the pointer flip is the commit, so a reader never sees (and a
-    * crash never leaves) a half-written dimension — the batch
+    * [[EpochStore]], so a reader never sees (and a crash never leaves)
+    * a half-written dimension — the batch
     * [[graft.operators.Scd2Ops.upsertDim]]'s materialize-then-overwrite
     * publish upgraded to an atomic one. */
   private[graft] def scd2Batch(batch: DataFrame, prefix: String,
@@ -743,28 +736,20 @@ object StreamOps {
     import sp.implicits._
     val store = new EpochStore(prefix, dir, Scd2Tables)
     val changes = batch.select($"k", $"seg_v", $"valid_from").distinct()
-    if (!store.exists(sp)) {
-      store.transact(sp) { tx =>
-        tx.writeSnap("dim", graft.operators.Scd2Ops.initDimFrame(changes))
-        if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-      }
-    } else {
+    lazy val dim = store.snap(sp, "dim")
+    store.guardedEpoch(sp, crashBeforeCommit) {
       // upsertDim's digest, replicated ahead of the replay guard
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"k").orderBy($"valid_from".desc, $"seg_v".desc)
-      val digest = changes
+      changes
         .withColumn("rn", row_number().over(w))
         .filter($"rn" === 1).drop("rn")
-      val dim = store.snap(sp, "dim")
-      val delta = digest.join(dim.select($"k", $"valid_from"),
-          Seq("k", "valid_from"), "left_anti")
-        .localCheckpoint() // one compute for the guard probe and the merge
-      try {
-        if (!delta.isEmpty) store.transact(sp) { tx =>
-          tx.writeSnap("dim", graft.operators.Scd2Ops.mergedDim(dim, delta))
-          if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-        }
-      } finally graft.operators.DedupOps.unpersistCheckpointed(delta)
+        .join(dim.select($"k", $"valid_from"), Seq("k", "valid_from"),
+          "left_anti")
+    } { tx =>
+      tx.writeSnap("dim", graft.operators.Scd2Ops.initDimFrame(changes))
+    } { (tx, delta) =>
+      tx.writeSnap("dim", graft.operators.Scd2Ops.mergedDim(dim, delta))
     }
   }
 
@@ -772,11 +757,9 @@ object StreamOps {
     snaps = Map("dim" -> Seq("k")), logs = Map.empty)
 
   def streamingScd2(changeStream: DataFrame, prefix: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changeStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        scd2Batch(batch.toDF(), prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(changeStream)((batch, _) =>
+      scd2Batch(batch, prefix, dir))
 
   /** Streaming day-2 RETRIEVAL-INDEX maintenance — t26's online dual,
     * completing the pattern pairing every day-2 batch maintainer with
@@ -791,24 +774,19 @@ object StreamOps {
     * snapshot. The corpus text is never re-read — per-batch cost is the
     * batch explode plus metadata-sized folds, t26's exact scale story.
     *
-    * Re-delivery discipline (streamingTriangles'): new docs are the
-    * batch MINUS doc_ids already in the committed dl log, so a
-    * replayed micro-batch after a restart has Δdocs = ∅ and is a TRUE
-    * no-op — no state write, no epoch bump (spec-pinned). The
-    * anti-join probes dl (doc-count-sized), never the posting list.
-    *
-    * All three tables commit ATOMICALLY through [[EpochStore]]:
-    * postings and dl land as the epoch's log deltas, the vocabulary-
-    * sized df fold lands as the epoch's snapshot, and the pointer flip
-    * after all three is the transaction (r11 verdict #5). */
+    * Guard: new docs are the batch MINUS doc_ids already in the
+    * committed dl log — the anti-join probes dl (doc-count-sized),
+    * never the posting list. Postings and dl land as the epoch's log
+    * deltas, the vocabulary-sized df fold as its snapshot. */
   private[graft] def bm25Batch(batch: DataFrame, prefix: String,
       dir: String, crashBeforeCommit: Boolean = false): Unit = {
     val sp = batch.sparkSession
     import sp.implicits._
     val store = new EpochStore(prefix, dir, Bm25Tables)
     val docs = batch.select($"doc_id", $"text").distinct()
-    if (!store.exists(sp)) {
-      store.transact(sp) { tx =>
+    store.guardedEpoch(sp, crashBeforeCommit)(docs.join(
+        store.log(sp, "dl").select($"doc_id"), Seq("doc_id"), "left_anti")) {
+      tx =>
         val tf = graft.operators.TextOps.bm25TfOf(docs)
           .localCheckpoint() // three writes below share the explode
         try {
@@ -817,30 +795,20 @@ object StreamOps {
             tf.groupBy($"doc_id").agg(sum($"tf").as("dl")))
           tx.writeSnap("df",
             tf.groupBy($"term").agg(count(lit(1)).as("df")))
-          if (crashBeforeCommit) throw new EpochStore.InjectedCrash
         } finally graft.operators.DedupOps.unpersistCheckpointed(tf)
-      }
-    } else {
-      val newDocs = docs.join(
-          store.log(sp, "dl").select($"doc_id"), Seq("doc_id"), "left_anti")
-        .localCheckpoint() // one compute for the guard probe and the explode
+    } { (tx, newDocs) =>
+      val tfNew = graft.operators.TextOps.bm25TfOf(newDocs)
+        .localCheckpoint() // shared by the three merges
       try {
-        if (!newDocs.isEmpty) store.transact(sp) { tx =>
-          val tfNew = graft.operators.TextOps.bm25TfOf(newDocs)
-            .localCheckpoint() // shared by the three merges
-          try {
-            // df folds by addition (disjoint doc sets)
-            tx.writeSnap("df", store.snap(sp, "df")
-              .unionByName(tfNew.groupBy($"term")
-                .agg(count(lit(1)).as("df")))
-              .groupBy($"term").agg(sum($"df").as("df")))
-            tx.writeLogDelta("dl",
-              tfNew.groupBy($"doc_id").agg(sum($"tf").as("dl")))
-            tx.writeLogDelta("post", tfNew)
-            if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-          } finally graft.operators.DedupOps.unpersistCheckpointed(tfNew)
-        }
-      } finally graft.operators.DedupOps.unpersistCheckpointed(newDocs)
+        // df folds by addition (disjoint doc sets)
+        tx.writeSnap("df", store.snap(sp, "df")
+          .unionByName(tfNew.groupBy($"term")
+            .agg(count(lit(1)).as("df")))
+          .groupBy($"term").agg(sum($"df").as("df")))
+        tx.writeLogDelta("dl",
+          tfNew.groupBy($"doc_id").agg(sum($"tf").as("dl")))
+        tx.writeLogDelta("post", tfNew)
+      } finally graft.operators.DedupOps.unpersistCheckpointed(tfNew)
     }
   }
 
@@ -849,11 +817,9 @@ object StreamOps {
     logs = Map("post" -> Seq("term"), "dl" -> Nil))
 
   def streamingBm25Index(docStream: DataFrame, prefix: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        bm25Batch(batch.toDF(), prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(docStream)((batch, _) =>
+      bm25Batch(batch, prefix, dir))
 
   /** Streaming incremental aggregate maintenance — q41's ONLINE dual:
     * the per-(returnflag, linestatus) summary is a standing snapshot
@@ -932,11 +898,9 @@ object StreamOps {
     snaps = Map("summary" -> Nil), logs = Map.empty)
 
   def streamingIvm(lineitemStream: DataFrame, prefix: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    lineitemStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        ivmBatch(batch.toDF(), prefix, dir, id)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(lineitemStream)((batch, id) =>
+      ivmBatch(batch, prefix, dir, id))
 
   /** Streaming connected-component maintenance — q50's online dual: a
     * stream of basket rows `(o, p)` folds into the standing support
@@ -953,22 +917,13 @@ object StreamOps {
     * components only MERGE — the monotonicity that makes the
     * incremental fold sound under any batch slicing.
     *
-    * Re-delivery discipline: support counts are READ-MODIFY-WRITE, so
-    * (unlike streamingTriangles' set-semantics edge state) a replayed
-    * batch cannot be detected from the counts themselves — a standing
+    * Guard: support counts are READ-MODIFY-WRITE, so (unlike
+    * streamingTriangles' set-semantics edge state) a replayed batch
+    * cannot be detected from the counts themselves — a standing
     * processed-baskets log (order-id-sized, bucketed by o: the
-    * anti-join's key) supplies the replay guard. Δbaskets = batch ∖
-    * processed; a replayed micro-batch after a restart has Δbaskets =
-    * ∅ and is a TRUE no-op — no state write, no epoch bump
-    * (spec-pinned).
-    *
-    * All three tables commit ATOMICALLY through [[EpochStore]] (r11
-    * verdict #5): the folded counts and repaired labels land as the
-    * next epoch's snapshots, the batch's order ids as the processed
-    * log's delta, and the pointer flip after all three is the
-    * transaction — the crash window between "counts landed" and
-    * "marker landed" that the r11 code could only document is gone,
-    * because neither is visible until the single flip. The counts
+    * anti-join's key) supplies it: Δbaskets = batch ∖ processed. The
+    * counts, labels and the batch's order ids land in one epoch, so
+    * "counts landed, marker not" cannot be observed. The counts
     * snapshot stays bucketed on the (a, b) fold key at every epoch, so
     * q50Fold's standing side remains exchange-free.
     *
@@ -983,40 +938,27 @@ object StreamOps {
     import sp.implicits._
     val store = new EpochStore(prefix, dir, ComponentsTables)
     val pl = batch.select($"o", $"p").distinct()
-    if (!store.exists(sp)) {
-      store.transact(sp) { tx =>
-        graft.operators.RelationalOps.q50InitState(
-          pl, tx.snapName("cnt"), tx.snapName("lbl"))
-        tx.writeLogDelta("proc", pl.select($"o").distinct())
-        if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-      }
-    } else {
-      val newBaskets = pl
-        .join(store.log(sp, "proc"), Seq("o"), "left_anti")
-        .localCheckpoint() // one compute for the guard probe and the fold
+    store.guardedEpoch(sp, crashBeforeCommit)(
+        pl.join(store.log(sp, "proc"), Seq("o"), "left_anti")) { tx =>
+      graft.operators.RelationalOps.q50InitState(
+        pl, tx.snapName("cnt"), tx.snapName("lbl"))
+      tx.writeLogDelta("proc", pl.select($"o").distinct())
+    } { (tx, newBaskets) =>
+      val sup = graft.operators.RelationalOps.Q49MinSupport
+      val merged = graft.operators.RelationalOps
+        .q50Fold(store.snapName(sp, "cnt"), newBaskets)
+        .localCheckpoint() // consumed by the labels AND the write
       try {
-        if (!newBaskets.isEmpty) store.transact(sp) { tx =>
-          val sup = graft.operators.RelationalOps.Q49MinSupport
-          val merged = graft.operators.RelationalOps
-            .q50Fold(store.snapName(sp, "cnt"), newBaskets)
-            .localCheckpoint() // consumed by the labels AND the write
-          try {
-            val labels = graft.operators.RelationalOps.q50Relabel(
-              store.snap(sp, "lbl"),
-              merged.filter($"n" >= sup)
-                .select($"a", $"b", ($"n_old" < sup).as("is_new")))
-            try {
-              tx.writeSnap("cnt", merged.select($"a", $"b", $"n"))
-              tx.writeSnap("lbl", labels)
-              tx.writeLogDelta("proc", newBaskets.select($"o").distinct())
-              if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-            } finally
-              graft.operators.DedupOps.unpersistCheckpointed(labels)
-          } finally
-            graft.operators.DedupOps.unpersistCheckpointed(merged)
-        }
-      } finally
-        graft.operators.DedupOps.unpersistCheckpointed(newBaskets)
+        val labels = graft.operators.RelationalOps.q50Relabel(
+          store.snap(sp, "lbl"),
+          merged.filter($"n" >= sup)
+            .select($"a", $"b", ($"n_old" < sup).as("is_new")))
+        try {
+          tx.writeSnap("cnt", merged.select($"a", $"b", $"n"))
+          tx.writeSnap("lbl", labels)
+          tx.writeLogDelta("proc", newBaskets.select($"o").distinct())
+        } finally graft.operators.DedupOps.unpersistCheckpointed(labels)
+      } finally graft.operators.DedupOps.unpersistCheckpointed(merged)
     }
   }
 
@@ -1026,11 +968,9 @@ object StreamOps {
 
   def streamingComponents(basketStream: DataFrame, prefix: String,
                           dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    basketStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        componentsBatch(batch.toDF(), prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(basketStream)((batch, _) =>
+      componentsBatch(batch, prefix, dir))
 
   /** Streaming component RETRACTION maintenance — q52's online dual and
     * the graph-state decremental path (r12 verdict #5; media dedup
@@ -1056,13 +996,10 @@ object StreamOps {
     * (the truncation fold derives a deleted basket's truncation from
     * the feed's own rows, and the pair subtraction needs every pair the
     * basket contributed — exactly what a CDC delete of an order gives).
-    * Replay guard: the processed-deletion order-id log; a re-delivered
-    * batch has Δdeletions = ∅ and is a TRUE no-op (no epoch bump).
-    * All four tables (counts, labels, truncation, processed log) commit
-    * atomically through [[EpochStore]]; counts stay bucketed on the
-    * (a, b) fold key at every epoch so the subtraction's standing side
-    * remains exchange-free — including after a process restart (the
-    * store re-registers the bucket spec on adoption). */
+    * Guard: the processed-deletion order-id log. Counts stay bucketed
+    * on the (a, b) fold key at every epoch so the subtraction's
+    * standing side remains exchange-free — including after a process
+    * restart (the store re-registers the bucket spec on adoption). */
   private[graft] def retractBatch(batch: DataFrame,
       standingCorpus: => DataFrame, prefix: String, dir: String,
       crashBeforeCommit: Boolean = false): Unit = {
@@ -1080,11 +1017,10 @@ object StreamOps {
           sp.emptyDataset[Long].toDF("o").select($"o"))
       }
     }
-    val newDel = del
-      .join(store.log(sp, "proc"), Seq("o"), "left_anti")
-      .localCheckpoint() // one compute for the guard probe and the fold
-    try {
-      if (!newDel.isEmpty) store.transact(sp) { tx =>
+    // the bootstrap above is day 1, so the day-1 body never runs
+    store.guardedEpoch(sp, crashBeforeCommit)(
+        del.join(store.log(sp, "proc"), Seq("o"), "left_anti"))(_ => ()) {
+      (tx, newDel) =>
         val sup = graft.operators.RelationalOps.Q49MinSupport
         val folded = graft.operators.RelationalOps
           .q52Fold(store.snapName(sp, "cnt"), newDel)
@@ -1108,14 +1044,9 @@ object StreamOps {
                 .select($"truncated_baskets".as("__tdel")))
               .select(($"__tall" - $"__tdel").as("truncated_baskets")))
             tx.writeLogDelta("proc", newDel.select($"o").distinct())
-            if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-          } finally
-            graft.operators.DedupOps.unpersistCheckpointed(labels)
-        } finally
-          graft.operators.DedupOps.unpersistCheckpointed(folded)
-      }
-    } finally
-      graft.operators.DedupOps.unpersistCheckpointed(newDel)
+          } finally graft.operators.DedupOps.unpersistCheckpointed(labels)
+        } finally graft.operators.DedupOps.unpersistCheckpointed(folded)
+    }
   }
 
   private[graft] val RetractTables = EpochTables(
@@ -1124,11 +1055,9 @@ object StreamOps {
 
   def streamingRetractions(deletionStream: DataFrame,
       standingCorpus: DataFrame, prefix: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deletionStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        retractBatch(batch.toDF(), standingCorpus, prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(deletionStream)((batch, _) =>
+      retractBatch(batch, standingCorpus, prefix, dir))
 
   /** Streaming media near-dup maintenance — m9's online dual, and the
     * first streaming maintainer here whose fold is DECREMENTAL: a
@@ -1139,16 +1068,13 @@ object StreamOps {
     * stream provably run the same fold). First batch is day 1
     * ([[graft.operators.MultimodalOps.m9InitState]]).
     *
-    * Replay guard: streamingComponents' processed-id log (pair
-    * intersections and df counts are read-modify-write, so a replay
-    * cannot be detected from the state itself) — Δdocs = batch ∖
-    * processed; a replayed batch is a TRUE no-op.
-    *
-    * All five tables commit ATOMICALLY through [[EpochStore]] (r11
-    * verdict #5): df/pairs/sizes as the epoch's snapshots, the batch
-    * sigs and processed ids as log deltas, one pointer flip as the
-    * transaction. The fold core reads the committed posting log
-    * through [[EpochStore.logView]], so it stays storage-agnostic. */
+    * Guard: streamingComponents' processed-id log (pair intersections
+    * and df counts are read-modify-write, so a replay cannot be
+    * detected from the state itself) — Δdocs = batch ∖ processed.
+    * df/pairs/sizes land as the epoch's snapshots, the batch sigs and
+    * processed ids as log deltas. The fold core reads the committed
+    * posting log through [[EpochStore.logView]], so it stays
+    * storage-agnostic. */
   private[graft] def mediaDedupBatch(batch: DataFrame, prefix: String,
       dir: String, crashBeforeCommit: Boolean = false): Unit = {
     val sp = batch.sparkSession
@@ -1156,36 +1082,26 @@ object StreamOps {
     import graft.operators.{DedupOps, MultimodalOps}
     val store = new EpochStore(prefix, dir, MediaDedupTables)
     val docsB = batch.select($"doc_id", $"text", $"n_chars").distinct()
-    if (!store.exists(sp)) {
-      store.transact(sp) { tx =>
-        MultimodalOps.m9InitState(docsB, tx.logDeltaName("post"),
-          tx.snapName("df"), tx.snapName("pair"), tx.snapName("n"))
-        tx.writeLogDelta("proc", docsB.select($"doc_id").distinct())
-        if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-      }
-    } else {
-      val newDocs = docsB
-        .join(store.log(sp, "proc"), Seq("doc_id"), "left_anti")
-        .localCheckpoint() // one compute for the guard probe and the fold
+    store.guardedEpoch(sp, crashBeforeCommit)(
+        docsB.join(store.log(sp, "proc"), Seq("doc_id"), "left_anti")) { tx =>
+      MultimodalOps.m9InitState(docsB, tx.logDeltaName("post"),
+        tx.snapName("df"), tx.snapName("pair"), tx.snapName("n"))
+      tx.writeLogDelta("proc", docsB.select($"doc_id").distinct())
+    } { (tx, newDocs) =>
+      val sigsNew = MultimodalOps.m9SigsFrom(newDocs)
+        .localCheckpoint() // consumed by the fold AND the post delta
       try {
-        if (!newDocs.isEmpty) store.transact(sp) { tx =>
-          val sigsNew = MultimodalOps.m9SigsFrom(newDocs)
-            .localCheckpoint() // consumed by the fold AND the post delta
-          try {
-            val (dfj, pairsF, nF) = MultimodalOps.m9Fold(
-              store.logView(sp, "post"), store.snapName(sp, "df"),
-              store.snapName(sp, "pair"), store.snapName(sp, "n"), sigsNew)
-            try {
-              tx.writeSnap("df", dfj.select($"frame_sig", $"df"))
-              tx.writeSnap("pair", pairsF)
-              tx.writeSnap("n", nF)
-              tx.writeLogDelta("post", sigsNew)
-              tx.writeLogDelta("proc", newDocs.select($"doc_id").distinct())
-              if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-            } finally DedupOps.unpersistCheckpointed(dfj)
-          } finally DedupOps.unpersistCheckpointed(sigsNew)
-        }
-      } finally DedupOps.unpersistCheckpointed(newDocs)
+        val (dfj, pairsF, nF) = MultimodalOps.m9Fold(
+          store.logView(sp, "post"), store.snapName(sp, "df"),
+          store.snapName(sp, "pair"), store.snapName(sp, "n"), sigsNew)
+        try {
+          tx.writeSnap("df", dfj.select($"frame_sig", $"df"))
+          tx.writeSnap("pair", pairsF)
+          tx.writeSnap("n", nF)
+          tx.writeLogDelta("post", sigsNew)
+          tx.writeLogDelta("proc", newDocs.select($"doc_id").distinct())
+        } finally DedupOps.unpersistCheckpointed(dfj)
+      } finally DedupOps.unpersistCheckpointed(sigsNew)
     }
   }
 
@@ -1194,11 +1110,9 @@ object StreamOps {
     logs = Map("post" -> Seq("frame_sig"), "proc" -> Seq("doc_id")))
 
   def streamingMediaDedup(docStream: DataFrame, prefix: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        mediaDedupBatch(batch.toDF(), prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(docStream)((batch, _) =>
+      mediaDedupBatch(batch, prefix, dir))
 
   /** Streaming skyline maintenance — the q56/q58/q59/q63 family's
     * online dual (r13 verdict #4: the one day-2 family without one),
@@ -1228,17 +1142,14 @@ object StreamOps {
     *    the batch twin (q63) documents — and resets the budget, so
     *    an oversized deletion batch is also correct by construction.
     *
-    * Replay guard: the processed (key, op) log — Δ = batch ∖
-    * processed, so a replayed micro-batch is a TRUE no-op. Keys are
-    * assumed ingested at most once per direction (no re-insert after
-    * delete — streamingRetractions' one-way-feed contract). Deletions
-    * are double-tracked: the PENDING snapshot (cleared at repair, it
-    * is the budget) and the PERMANENT `delx` log that repair subtracts
-    * — repair against the pending set alone would resurrect earlier
-    * repaired-away deletions (the seeded-random multi-repair spec
-    * caught exactly that). All seven tables commit ATOMICALLY through
-    * [[EpochStore]]; a crash before the pointer flip leaves the
-    * previous epoch intact (spec-injected via `crashBeforeCommit`). */
+    * Guard: the processed (key, op) log — Δ = batch ∖ processed. Keys
+    * are assumed ingested at most once per direction (no re-insert
+    * after delete — streamingRetractions' one-way-feed contract).
+    * Deletions are double-tracked: the PENDING snapshot (cleared at
+    * repair, it is the budget) and the PERMANENT `delx` log that
+    * repair subtracts — repair against the pending set alone would
+    * resurrect earlier repaired-away deletions (the seeded-random
+    * multi-repair spec caught exactly that). */
   private[graft] def skylineBatch(batch: DataFrame,
       standingCorpus: => DataFrame, prefix: String, dir: String,
       crashBeforeCommit: Boolean = false): Unit = {
@@ -1268,11 +1179,10 @@ object StreamOps {
     }
     val ops = batch
       .select($"p_partkey", $"p_retailprice", $"p_size", $"op").distinct()
-    val newOps = ops
-      .join(store.log(sp, "proc"), Seq("p_partkey", "op"), "left_anti")
-      .localCheckpoint() // one compute for the guard probe and the fold
-    try {
-      if (!newOps.isEmpty) {
+    // the bootstrap above is day 1, so the day-1 body never runs
+    store.guardedEpoch(sp, crashBeforeCommit)(ops.join(
+        store.log(sp, "proc"), Seq("p_partkey", "op"), "left_anti"))(_ => ()) {
+      (tx, newOps) =>
         val ins = newOps.filter($"op" === "insert")
           .select($"p_partkey", $"p_retailprice", $"p_size")
         val del = newOps.filter($"op" === "delete").select($"p_partkey")
@@ -1280,53 +1190,49 @@ object StreamOps {
         val nPending = store.snap(sp, "meta").select($"n_del")
           .as[Long].head()
         val nDel = del.count()
-        store.transact(sp) { tx =>
-          if (nPending + nDel > nLayers - 1) {
-            // REPAIR: the one amortized corpus pass per deletion cycle.
-            // Subtracts the FULL deletion LOG, not the pending set —
-            // repair clears the pending budget, so deletions from an
-            // earlier repaired cycle live only in the log; rebuilding
-            // against the pending set alone would RESURRECT them
-            // (caught by the seeded-random multi-repair spec).
-            val live = standingCorpus
-              .select($"p_partkey", $"p_retailprice", $"p_size")
-              .unionByName(store.log(sp, "ins"))
-              .unionByName(ins)
-              .join(store.log(sp, "delx").unionByName(del),
-                Seq("p_partkey"), "left_anti")
-            val layers = RelationalOps.skylineLayers(live, nLayers)
-            try {
-              layerNames.zip(layers).foreach { case (ln, l) =>
-                tx.writeSnap(ln, l)
-              }
-              tx.writeSnap("del", Seq.empty[Long].toDF("p_partkey"))
-              tx.writeSnap("meta", Seq(0L).toDF("n_del"))
-            } finally layers.foreach(DedupOps.unpersistCheckpointed)
-          } else {
-            // metadata-only fold: cascade inserts, append deletions
-            var add = ins
-            val folded = layerNames.map { ln =>
-              val merged = store.snap(sp, ln).unionByName(add)
-              val li = RelationalOps.q56From(merged).localCheckpoint()
-              add = merged.join(li.select($"p_partkey"),
-                Seq("p_partkey"), "left_anti")
-              (ln, li)
+        if (nPending + nDel > nLayers - 1) {
+          // REPAIR: the one amortized corpus pass per deletion cycle.
+          // Subtracts the FULL deletion LOG, not the pending set —
+          // repair clears the pending budget, so deletions from an
+          // earlier repaired cycle live only in the log; rebuilding
+          // against the pending set alone would RESURRECT them
+          // (caught by the seeded-random multi-repair spec).
+          val live = standingCorpus
+            .select($"p_partkey", $"p_retailprice", $"p_size")
+            .unionByName(store.log(sp, "ins"))
+            .unionByName(ins)
+            .join(store.log(sp, "delx").unionByName(del),
+              Seq("p_partkey"), "left_anti")
+          val layers = RelationalOps.skylineLayers(live, nLayers)
+          try {
+            layerNames.zip(layers).foreach { case (ln, l) =>
+              tx.writeSnap(ln, l)
             }
-            try {
-              folded.foreach { case (ln, l) => tx.writeSnap(ln, l) }
-              tx.writeSnap("del", store.snap(sp, "del").unionByName(del))
-              tx.writeSnap("meta", Seq(nPending + nDel).toDF("n_del"))
-            } finally folded.foreach { case (_, l) =>
-              DedupOps.unpersistCheckpointed(l)
-            }
+            tx.writeSnap("del", Seq.empty[Long].toDF("p_partkey"))
+            tx.writeSnap("meta", Seq(0L).toDF("n_del"))
+          } finally layers.foreach(DedupOps.unpersistCheckpointed)
+        } else {
+          // metadata-only fold: cascade inserts, append deletions
+          var add = ins
+          val folded = layerNames.map { ln =>
+            val merged = store.snap(sp, ln).unionByName(add)
+            val li = RelationalOps.q56From(merged).localCheckpoint()
+            add = merged.join(li.select($"p_partkey"),
+              Seq("p_partkey"), "left_anti")
+            (ln, li)
           }
-          tx.writeLogDelta("ins", ins)
-          tx.writeLogDelta("delx", del)
-          tx.writeLogDelta("proc", newOps.select($"p_partkey", $"op"))
-          if (crashBeforeCommit) throw new EpochStore.InjectedCrash
+          try {
+            folded.foreach { case (ln, l) => tx.writeSnap(ln, l) }
+            tx.writeSnap("del", store.snap(sp, "del").unionByName(del))
+            tx.writeSnap("meta", Seq(nPending + nDel).toDF("n_del"))
+          } finally folded.foreach { case (_, l) =>
+            DedupOps.unpersistCheckpointed(l)
+          }
         }
-      }
-    } finally DedupOps.unpersistCheckpointed(newOps)
+        tx.writeLogDelta("ins", ins)
+        tx.writeLogDelta("delx", del)
+        tx.writeLogDelta("proc", newOps.select($"p_partkey", $"op"))
+    }
   }
 
   /** The served frontier over [[skylineBatch]]'s committed state:
@@ -1349,11 +1255,9 @@ object StreamOps {
 
   def streamingSkyline(changeStream: DataFrame,
       standingCorpus: DataFrame, prefix: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changeStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        skylineBatch(batch.toDF(), standingCorpus, prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(changeStream)((batch, _) =>
+      skylineBatch(batch, standingCorpus, prefix, dir))
 
   // -------------------------------------------------- decayed engagement
 
@@ -1371,14 +1275,10 @@ object StreamOps {
     * never goes stale — time advancing is just a different broadcast
     * constant at read time, no state touch at all.
     *
-    * Re-delivery discipline: daily sums are READ-MODIFY-WRITE (the
-    * components/IVM case, not the set-semantics one), so a standing
-    * processed-event-id log supplies the replay guard. Δevents =
-    * batch ∖ processed; a replayed micro-batch after a restart has
-    * Δevents = ∅ and is a TRUE no-op — no state write, no epoch bump
-    * (spec-pinned). Both tables commit atomically through
-    * [[EpochStore]]; the daily snapshot stays bucketed on the FULL
-    * fold key (user_id, d) at every epoch so
+    * Guard: daily sums are READ-MODIFY-WRITE (the components/IVM case,
+    * not the set-semantics one), so a standing processed-event-id log
+    * supplies it: Δevents = batch ∖ processed. The daily snapshot
+    * stays bucketed on the FULL fold key (user_id, d) at every epoch so
     * [[graft.operators.EventOps.e31Fold]]'s standing side plans zero
     * exchange — per batch, only the batch's own daily partials
     * shuffle, the standing table never moves. Serve is e31's score
@@ -1401,29 +1301,18 @@ object StreamOps {
       .groupBy($"event_id")
       .agg(max(struct($"ts", $"user_id", $"value")).as("w"))
       .select($"event_id", $"w.user_id", $"w.ts", $"w.value")
-    if (!store.exists(sp)) {
-      store.transact(sp) { tx =>
-        tx.writeSnap("daily", graft.operators.EventOps.e31Daily(ev))
-        tx.writeLogDelta("proc", // unique by dedupe; d enables decayTrim
-          ev.select($"event_id", to_date($"ts").as("d")))
-        if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-      }
-    } else {
-      val newEv = ev
-        .join(store.log(sp, "proc"), Seq("event_id"), "left_anti")
-        .localCheckpoint() // one compute for the guard probe and the fold
-      try {
-        if (!newEv.isEmpty) store.transact(sp) { tx =>
-          // e31Fold: co-partitioned full-outer against the bucketed
-          // snapshot — only the batch's daily partials shuffle
-          tx.writeSnap("daily", graft.operators.EventOps.e31Fold(
-            store.snapName(sp, "daily"), newEv))
-          tx.writeLogDelta("proc", // unique by dedupe; d enables decayTrim
-            newEv.select($"event_id", to_date($"ts").as("d")))
-          if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-        }
-      } finally
-        graft.operators.DedupOps.unpersistCheckpointed(newEv)
+    store.guardedEpoch(sp, crashBeforeCommit)(
+        ev.join(store.log(sp, "proc"), Seq("event_id"), "left_anti")) { tx =>
+      tx.writeSnap("daily", graft.operators.EventOps.e31Daily(ev))
+      tx.writeLogDelta("proc", // unique by dedupe; d enables decayTrim
+        ev.select($"event_id", to_date($"ts").as("d")))
+    } { (tx, newEv) =>
+      // e31Fold: co-partitioned full-outer against the bucketed
+      // snapshot — only the batch's daily partials shuffle
+      tx.writeSnap("daily", graft.operators.EventOps.e31Fold(
+        store.snapName(sp, "daily"), newEv))
+      tx.writeLogDelta("proc", // unique by dedupe; d enables decayTrim
+        newEv.select($"event_id", to_date($"ts").as("d")))
     }
   }
 
@@ -1461,26 +1350,43 @@ object StreamOps {
     * ([[EpochStore.compact]]'s logRetention) serves any RMW
     * maintainer's guard log with a time column. */
   def decayTrim(sp: org.apache.spark.sql.SparkSession, prefix: String,
-      dir: String, horizonDays: Int): Unit = {
-    import sp.implicits._
+      dir: String, horizonDays: Int): Unit =
+    horizonTrim(sp, prefix, dir, DecayTables, horizonDays)(store =>
+      maxDay(store.snap(sp, "daily")))
+
+  /** Compact the maintainer's store, keeping only `proc` rows dated
+    * within `horizonDays` of `maxDay` (plus any `otherLogs` retention)
+    * — the trim behind [[decayTrim]], [[sessionTrim]],
+    * [[upsertSessionTrim]] and [[topkCompact]]. With no reference day
+    * (an empty state) the whole log is kept: conservative. */
+  private def horizonTrim(sp: SparkSession, prefix: String, dir: String,
+      tables: EpochTables, horizonDays: Int,
+      otherLogs: Map[String, DataFrame => DataFrame] = Map.empty)(
+      maxDay: EpochStore => Option[java.time.LocalDate]): Unit = {
     require(horizonDays >= 0, s"horizonDays must be >= 0, got $horizonDays")
-    val store = new EpochStore(prefix, dir, DecayTables)
-    val mx = store.snap(sp, "daily").agg(max($"d").as("mx")).first()
-    if (mx.isNullAt(0)) store.compact(sp, retain = 0) // empty state: no
-    else {           // reference day — keep the whole log (conservative)
-      val cutoff = mx.getDate(0).toLocalDate.minusDays(horizonDays.toLong)
-      store.compact(sp, retain = 0, logRetention = Map(
-        "proc" -> ((log: org.apache.spark.sql.DataFrame) =>
-          log.filter($"d" >= lit(java.sql.Date.valueOf(cutoff))))))
+    val store = new EpochStore(prefix, dir, tables)
+    val keep: DataFrame => DataFrame = maxDay(store) match {
+      case None => identity
+      case Some(mx) =>
+        val cutoff = java.sql.Date.valueOf(mx.minusDays(horizonDays.toLong))
+        _.filter(col("d") >= lit(cutoff))
     }
+    store.compact(sp, retain = 0, logRetention = otherLogs + ("proc" -> keep))
   }
 
+  /** The greatest `d` (a DATE column) in `df`; None when `df` is empty. */
+  private def maxDay(df: DataFrame): Option[java.time.LocalDate] =
+    Option(df.agg(max(col("d"))).first().getDate(0)).map(_.toLocalDate)
+
+  /** The UTC day the latest session in a sessions snapshot ends on. */
+  private def lastSessionDay(sessions: DataFrame) =
+    Option(sessions.agg(max(col("end_us"))).first().getAs[java.lang.Long](0))
+      .map(us => java.time.LocalDate.ofEpochDay(us / 86400000000L))
+
   def streamingDecay(eventStream: DataFrame, prefix: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    eventStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        decayBatch(batch.toDF(), prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(eventStream)((batch, _) =>
+      decayBatch(batch, prefix, dir))
 
   // ---------------------------------------------- streaming sessions
 
@@ -1499,12 +1405,11 @@ object StreamOps {
     * of all processed events, so its sessions are > gap apart and the
     * proof's premises hold for every subsequent batch.
     *
-    * Re-delivery discipline is decayBatch's verbatim: one row per
-    * event_id per batch (deterministic arg-max), processed-id log
-    * anti-join, replayed batches are true no-ops (no epoch bump), and
-    * the log carries the event DATE so [[sessionTrim]] can apply the
-    * same re-delivery-horizon retention as [[decayTrim]] (same
-    * contract: the horizon must cover the source's replay window). */
+    * Guard: decayBatch's — one row per event_id per batch
+    * (deterministic arg-max) anti-joined against the processed-id log,
+    * which carries the event DATE so [[sessionTrim]] can apply the same
+    * re-delivery-horizon retention as [[decayTrim]] (same contract:
+    * the horizon must cover the source's replay window). */
   private[graft] val SessionTables = EpochTables(
     snaps = Map("sessions" -> Seq("user_id")),
     logs = Map("proc" -> Seq("event_id")))
@@ -1519,28 +1424,17 @@ object StreamOps {
       .groupBy($"event_id")
       .agg(max(struct($"ts", $"user_id")).as("w"))
       .select($"event_id", $"w.user_id", $"w.ts")
-    if (!store.exists(sp)) {
-      store.transact(sp) { tx =>
-        tx.writeSnap("sessions", graft.operators.EventOps.e32Sessions(ev))
-        tx.writeLogDelta("proc",
-          ev.select($"event_id", to_date($"ts").as("d")))
-        if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-      }
-    } else {
-      val newEv = ev
-        .join(store.log(sp, "proc"), Seq("event_id"), "left_anti")
-        .localCheckpoint() // one compute for the guard probe and the fold
-      try {
-        if (!newEv.isEmpty) store.transact(sp) { tx =>
-          val (resw, untouched) = graft.operators.EventOps
-            .e32MergedParts(store.snapName(sp, "sessions"), newEv)
-          tx.writeSnap("sessions", resw.unionByName(untouched))
-          tx.writeLogDelta("proc",
-            newEv.select($"event_id", to_date($"ts").as("d")))
-          if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-        }
-      } finally
-        graft.operators.DedupOps.unpersistCheckpointed(newEv)
+    store.guardedEpoch(sp, crashBeforeCommit)(
+        ev.join(store.log(sp, "proc"), Seq("event_id"), "left_anti")) { tx =>
+      tx.writeSnap("sessions", graft.operators.EventOps.e32Sessions(ev))
+      tx.writeLogDelta("proc",
+        ev.select($"event_id", to_date($"ts").as("d")))
+    } { (tx, newEv) =>
+      val (resw, untouched) = graft.operators.EventOps
+        .e32MergedParts(store.snapName(sp, "sessions"), newEv)
+      tx.writeSnap("sessions", resw.unionByName(untouched))
+      tx.writeLogDelta("proc",
+        newEv.select($"event_id", to_date($"ts").as("d")))
     }
   }
 
@@ -1556,28 +1450,14 @@ object StreamOps {
   /** [[decayTrim]]'s retention for the session maintainer's
     * processed-id log; same horizon contract. */
   def sessionTrim(sp: org.apache.spark.sql.SparkSession, prefix: String,
-      dir: String, horizonDays: Int): Unit = {
-    import sp.implicits._
-    require(horizonDays >= 0, s"horizonDays must be >= 0, got $horizonDays")
-    val store = new EpochStore(prefix, dir, SessionTables)
-    val mx = store.snap(sp, "sessions")
-      .agg(max($"end_us").as("mx")).first()
-    if (mx.isNullAt(0)) store.compact(sp, retain = 0) // empty state: no
-    else {           // reference day — keep the whole log (conservative)
-      val cutoff = java.time.LocalDate.ofEpochDay(mx.getLong(0) / 86400000000L)
-        .minusDays(horizonDays.toLong)
-      store.compact(sp, retain = 0, logRetention = Map(
-        "proc" -> ((log: org.apache.spark.sql.DataFrame) =>
-          log.filter($"d" >= lit(java.sql.Date.valueOf(cutoff))))))
-    }
-  }
+      dir: String, horizonDays: Int): Unit =
+    horizonTrim(sp, prefix, dir, SessionTables, horizonDays)(store =>
+      lastSessionDay(store.snap(sp, "sessions")))
 
   def streamingSessions(eventStream: DataFrame, prefix: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    eventStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sessionBatch(batch.toDF(), prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(eventStream)((batch, _) =>
+      sessionBatch(batch, prefix, dir))
 
   // ------------------------------------ streaming session upserts
 
@@ -1593,11 +1473,10 @@ object StreamOps {
     * premise (standing ts_list = surviving multiset) re-establishes
     * itself for the next batch.
     *
-    * Re-delivery discipline extends decayBatch's: the guard key is
-    * (event_id, op) — an event's add and its later del are DISTINCT
-    * ledger entries, each deduped to one row per batch (deterministic
-    * arg-max) and anti-joined against the proc log, so replays of
-    * either are true no-ops (no epoch bump). CDC contract (the
+    * Guard: decayBatch's, keyed on (event_id, op) — an event's add and
+    * its later del are DISTINCT ledger entries, each deduped to one row
+    * per batch (deterministic arg-max) and anti-joined against the proc
+    * log, so replays of either are true no-ops. CDC contract (the
     * caller's to uphold, exactly like any changelog consumer): a del
     * names the same (user_id, ts) as the add it retracts and must
     * causally FOLLOW it — a del for a never-seen event no-ops (the
@@ -1624,33 +1503,22 @@ object StreamOps {
       .select($"event_id", $"op", $"w.user_id", $"w.ts")
     def side(rows: DataFrame, o: String) = rows.filter($"op" === o)
       .select($"user_id", unix_micros($"ts").as("us"))
-    if (!store.exists(sp)) {
-      store.transact(sp) { tx =>
-        val empty = sp.createDataFrame(
-          sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          graft.operators.EventOps.E35StateSchema)
-        tx.writeSnap("sessions", graft.operators.EventOps.e35Resweep(
-          empty, side(ev, "add"), side(ev, "del")))
-        tx.writeLogDelta("proc",
-          ev.select($"event_id", $"op", to_date($"ts").as("d")))
-        if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-      }
-    } else {
-      val newEv = ev
-        .join(store.log(sp, "proc"), Seq("event_id", "op"), "left_anti")
-        .localCheckpoint() // one compute for the guard probe and the fold
-      try {
-        if (!newEv.isEmpty) store.transact(sp) { tx =>
-          val (resw, untouched) = graft.operators.EventOps
-            .e35MergedParts(store.snapName(sp, "sessions"),
-              side(newEv, "add"), side(newEv, "del"))
-          tx.writeSnap("sessions", resw.unionByName(untouched))
-          tx.writeLogDelta("proc",
-            newEv.select($"event_id", $"op", to_date($"ts").as("d")))
-          if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-        }
-      } finally
-        graft.operators.DedupOps.unpersistCheckpointed(newEv)
+    store.guardedEpoch(sp, crashBeforeCommit)(ev.join(
+        store.log(sp, "proc"), Seq("event_id", "op"), "left_anti")) { tx =>
+      val empty = sp.createDataFrame(
+        sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        graft.operators.EventOps.E35StateSchema)
+      tx.writeSnap("sessions", graft.operators.EventOps.e35Resweep(
+        empty, side(ev, "add"), side(ev, "del")))
+      tx.writeLogDelta("proc",
+        ev.select($"event_id", $"op", to_date($"ts").as("d")))
+    } { (tx, newEv) =>
+      val (resw, untouched) = graft.operators.EventOps
+        .e35MergedParts(store.snapName(sp, "sessions"),
+          side(newEv, "add"), side(newEv, "del"))
+      tx.writeSnap("sessions", resw.unionByName(untouched))
+      tx.writeLogDelta("proc",
+        newEv.select($"event_id", $"op", to_date($"ts").as("d")))
     }
   }
 
@@ -1668,32 +1536,18 @@ object StreamOps {
     * copy matches; the contract forbids the source re-delivering past
     * the horizon either way). */
   def upsertSessionTrim(sp: org.apache.spark.sql.SparkSession,
-      prefix: String, dir: String, horizonDays: Int): Unit = {
-    import sp.implicits._
-    require(horizonDays >= 0, s"horizonDays must be >= 0, got $horizonDays")
-    val store = new EpochStore(prefix, dir, UpsertSessionTables)
+      prefix: String, dir: String, horizonDays: Int): Unit =
     // an ALL-DELETED corpus is legitimate here (total GDPR erasure):
-    // with no surviving event to date the horizon from, keep the whole
-    // guard log — conservative, and replays stay no-ops
-    val mx = store.snap(sp, "sessions")
-      .agg(max($"end_us").as("mx")).first()
-    if (mx.isNullAt(0)) store.compact(sp, retain = 0)
-    else {
-      val cutoff = java.time.LocalDate.ofEpochDay(mx.getLong(0) / 86400000000L)
-        .minusDays(horizonDays.toLong)
-      store.compact(sp, retain = 0, logRetention = Map(
-        "proc" -> ((log: org.apache.spark.sql.DataFrame) =>
-          log.filter($"d" >= lit(java.sql.Date.valueOf(cutoff))))))
-    }
-  }
+    // with no surviving event to date the horizon from, the whole guard
+    // log is kept — conservative, and replays stay no-ops
+    horizonTrim(sp, prefix, dir, UpsertSessionTables, horizonDays)(store =>
+      lastSessionDay(store.snap(sp, "sessions")))
 
   def streamingSessionUpserts(cdcStream: DataFrame, prefix: String,
       dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    cdcStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        upsertSessionBatch(batch.toDF(), prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(cdcStream)((batch, _) =>
+      upsertSessionBatch(batch, prefix, dir))
 
   // ------------------------------------------ streaming top-k upserts
 
@@ -1749,65 +1603,54 @@ object StreamOps {
     def ledgerDelta(rows: DataFrame) =
       side(rows, "add").withColumn("w", lit(1L))
         .unionByName(side(rows, "del").withColumn("w", lit(-1L)))
-    if (!store.exists(sp)) {
-      store.transact(sp) { tx =>
-        val (buf, thr) = topkPrefix(topkSurvivors(ledgerDelta(ev)), cap)
-        tx.writeSnap("buf", buf)
-        tx.writeSnap("thr", thr)
-        tx.writeLogDelta("base", ledgerDelta(ev))
-        tx.writeLogDelta("proc",
-          ev.select($"event_id", $"op", to_date($"ts").as("d")))
-        if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-      }
-    } else {
-      val newEv = ev
-        .join(store.log(sp, "proc"), Seq("event_id", "op"), "left_anti")
-        .localCheckpoint() // one compute for the guard probe and the fold
-      try {
-        if (!newEv.isEmpty) store.transact(sp) { tx =>
-          val adds = side(newEv, "add")
-          val dels = side(newEv, "del")
-          val buf0 = store.snap(sp, "buf")
-          val thr0 = store.snap(sp, "thr")
-          val delsK = dels.repartition(graft.sources.LayoutOps
-            .tableBuckets(sp, store.snapName(sp, "buf")), $"g")
-          val bufSurv = buf0.join(delsK, Seq("g", "id"), "left_anti")
-          val aboveThr = adds.join(thr0, Seq("g"), "left")
-            .filter($"tv".isNull || $"v" > $"tv" ||
-              ($"v" === $"tv" && $"id" <= $"tid"))
-            .select($"g", $"id", $"v")
-          val merged = bufSurv.unionByName(aboveThr)
-          val nByG = merged.groupBy($"g").agg(count(lit(1)).as("nb"))
-          // refill candidates come from θ's group list LEFT-joined to
-          // the counts, NOT semi-joined from them: a θ'd group whose
-          // ENTIRE buffer a batch deletes has zero merged rows — no
-          // count row at all — and must still refill (below-θ
-          // survivors may exist in the ledger)
-          val refillG = thr0.select($"g")
-            .join(nByG, Seq("g"), "left")
-            .filter(coalesce($"nb", lit(0L)) <
-              graft.operators.RelationalOps.Q64K)
-            .select($"g")
-          val overG = nByG.filter($"nb" > cap).select($"g")
-          val routed = refillG.unionByName(overG)
-          val ledger = store.log(sp, "base").unionByName(ledgerDelta(newEv))
-          val (bufR, thrR) = topkPrefix(
-            topkSurvivors(ledger.join(refillG, Seq("g"), "left_semi")), cap)
-          val (bufO, thrO) = topkPrefix(
-            merged.join(overG, Seq("g"), "left_semi"), cap)
-          val bufP = merged.join(routed, Seq("g"), "left_anti")
-          val thrP = thr0.join(routed, Seq("g"), "left_anti")
-          tx.writeSnap("buf",
-            bufP.unionByName(bufO).unionByName(bufR))
-          tx.writeSnap("thr",
-            thrP.unionByName(thrO).unionByName(thrR))
-          tx.writeLogDelta("base", ledgerDelta(newEv))
-          tx.writeLogDelta("proc",
-            newEv.select($"event_id", $"op", to_date($"ts").as("d")))
-          if (crashBeforeCommit) throw new EpochStore.InjectedCrash
-        }
-      } finally
-        graft.operators.DedupOps.unpersistCheckpointed(newEv)
+    store.guardedEpoch(sp, crashBeforeCommit)(ev.join(
+        store.log(sp, "proc"), Seq("event_id", "op"), "left_anti")) { tx =>
+      val (buf, thr) = topkPrefix(topkSurvivors(ledgerDelta(ev)), cap)
+      tx.writeSnap("buf", buf)
+      tx.writeSnap("thr", thr)
+      tx.writeLogDelta("base", ledgerDelta(ev))
+      tx.writeLogDelta("proc",
+        ev.select($"event_id", $"op", to_date($"ts").as("d")))
+    } { (tx, newEv) =>
+      val adds = side(newEv, "add")
+      val dels = side(newEv, "del")
+      val buf0 = store.snap(sp, "buf")
+      val thr0 = store.snap(sp, "thr")
+      val delsK = dels.repartition(graft.sources.LayoutOps
+        .tableBuckets(sp, store.snapName(sp, "buf")), $"g")
+      val bufSurv = buf0.join(delsK, Seq("g", "id"), "left_anti")
+      val aboveThr = adds.join(thr0, Seq("g"), "left")
+        .filter($"tv".isNull || $"v" > $"tv" ||
+          ($"v" === $"tv" && $"id" <= $"tid"))
+        .select($"g", $"id", $"v")
+      val merged = bufSurv.unionByName(aboveThr)
+      val nByG = merged.groupBy($"g").agg(count(lit(1)).as("nb"))
+      // refill candidates come from θ's group list LEFT-joined to
+      // the counts, NOT semi-joined from them: a θ'd group whose
+      // ENTIRE buffer a batch deletes has zero merged rows — no
+      // count row at all — and must still refill (below-θ
+      // survivors may exist in the ledger)
+      val refillG = thr0.select($"g")
+        .join(nByG, Seq("g"), "left")
+        .filter(coalesce($"nb", lit(0L)) <
+          graft.operators.RelationalOps.Q64K)
+        .select($"g")
+      val overG = nByG.filter($"nb" > cap).select($"g")
+      val routed = refillG.unionByName(overG)
+      val ledger = store.log(sp, "base").unionByName(ledgerDelta(newEv))
+      val (bufR, thrR) = topkPrefix(
+        topkSurvivors(ledger.join(refillG, Seq("g"), "left_semi")), cap)
+      val (bufO, thrO) = topkPrefix(
+        merged.join(overG, Seq("g"), "left_semi"), cap)
+      val bufP = merged.join(routed, Seq("g"), "left_anti")
+      val thrP = thr0.join(routed, Seq("g"), "left_anti")
+      tx.writeSnap("buf",
+        bufP.unionByName(bufO).unionByName(bufR))
+      tx.writeSnap("thr",
+        thrP.unionByName(thrO).unionByName(thrR))
+      tx.writeLogDelta("base", ledgerDelta(newEv))
+      tx.writeLogDelta("proc",
+        newEv.select($"event_id", $"op", to_date($"ts").as("d")))
     }
   }
 
@@ -1854,27 +1697,14 @@ object StreamOps {
     * equivalent for every future refill — `w` sums are replaced by a
     * single +1 row per survivor. */
   def topkCompact(sp: org.apache.spark.sql.SparkSession, prefix: String,
-      dir: String, horizonDays: Int): Unit = {
-    import sp.implicits._
-    require(horizonDays >= 0, s"horizonDays must be >= 0, got $horizonDays")
-    val store = new EpochStore(prefix, dir, TopkTables)
-    val mx = store.log(sp, "proc").agg(max($"d").as("mx")).first()
-    val procKeep: DataFrame => DataFrame =
-      if (mx.isNullAt(0)) identity
-      else { log =>
-        val cutoff = mx.getDate(0).toLocalDate.minusDays(horizonDays.toLong)
-        log.filter($"d" >= lit(java.sql.Date.valueOf(cutoff)))
-      }
-    store.compact(sp, retain = 0, logRetention = Map(
+      dir: String, horizonDays: Int): Unit =
+    horizonTrim(sp, prefix, dir, TopkTables, horizonDays, Map(
       "base" -> ((log: DataFrame) =>
-        topkSurvivors(log).withColumn("w", lit(1L))),
-      "proc" -> procKeep))
-  }
+        topkSurvivors(log).withColumn("w", lit(1L)))))(store =>
+      maxDay(store.log(sp, "proc")))
 
   def streamingTopk(cdcStream: DataFrame, prefix: String, dir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    cdcStream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        topkBatch(batch.toDF(), prefix, dir)
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(cdcStream)((batch, _) =>
+      topkBatch(batch, prefix, dir))
 }

@@ -25,10 +25,12 @@ object StreamSync {
     *
     * If a batch can contain several versions of one key, pass `orderCol`
     * (a monotone version/sequence/timestamp column): the row with the
-    * greatest value wins. Without it, rows are applied as-is — correct
-    * only when the upstream guarantees at most one row per key per batch
-    * (shuffle merge order is otherwise nondeterministic, so no silent
-    * "last wins" is attempted). */
+    * greatest value wins. Rows that tie on it are ranked by the other
+    * non-key columns, in schema order, descending, so the winner does
+    * not depend on arrival order. Without `orderCol`, rows are applied
+    * as-is — correct only when the upstream guarantees at most one row
+    * per key per batch (shuffle merge order is otherwise
+    * nondeterministic, so no silent "last wins" is attempted). */
   def upsertBatch(conf: SyncConf, dialect: SqlDialect, table: String,
                   keyCols: Seq[String], orderCol: Option[String] = None)
                  (batch: DataFrame, batchId: Long): Unit = {
@@ -46,7 +48,9 @@ object StreamSync {
       case Some(oc) =>
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions.{col, row_number}
-        val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(oc).desc)
+        val ties = cols.filterNot(c => c == oc || keyCols.contains(c))
+        val w = Window.partitionBy(keyCols.map(col): _*)
+          .orderBy((oc +: ties).map(c => col(c).desc): _*)
         batch.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
       case None => batch

@@ -628,6 +628,39 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("upsertBatch with orderCol: rows of one key that tie on it pick " +
+      "the same winner whatever their input order") {
+    val url = "jdbc:derby:memory:upstie;create=true"
+    val conf = SyncConf(sourceUrl = url, targetUrl = url, database = "APP")
+    def applyInOrder(rows: Seq[(Long, String, Long)]) = {
+      val c = DriverManager.getConnection(url)
+      try {
+        val st = c.createStatement()
+        try st.execute("DROP TABLE \"TIE\"")
+        catch { case _: java.sql.SQLException => () }
+        st.execute("CREATE TABLE \"TIE\" (\"id\" BIGINT NOT NULL, " +
+          "\"v\" VARCHAR(20), \"seq\" BIGINT)")
+        st.close()
+      } finally c.close()
+      StreamSync.upsertBatch(conf, DerbyDialect, "TIE", Seq("id"),
+        Some("seq"))(rows.toDF("id", "v", "seq"), 0L)
+      val c2 = DriverManager.getConnection(url)
+      try {
+        val rs = c2.createStatement().executeQuery(
+          "SELECT \"id\", \"v\", \"seq\" FROM \"TIE\" ORDER BY \"id\"")
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (r.getLong(1), r.getString(2), r.getLong(3))).toList
+      } finally c2.close()
+    }
+    // key 1: "a" and "b" tie on seq 5; key 2 has a clear winner
+    val rows = Seq((1L, "a", 5L), (1L, "b", 5L), (2L, "x", 1L), (2L, "y", 2L))
+    val forward = applyInOrder(rows)
+    val backward = applyInOrder(rows.reverse)
+    assert(forward == backward, "the tie's winner depends on input order")
+    // the tie breaks on the non-key columns, descending
+    assert(forward == List((1L, "b", 5L), (2L, "y", 2L)))
+  }
+
   test("streaming dedup emits each event_id once across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EvId]
