@@ -2184,9 +2184,8 @@ object EventOps {
     * fold's own premise for the next batch (the inductive step).
     * Deletes must causally follow the insert they retract (the CDC
     * contract); a delete with no matching surviving copy is a no-op,
-    * never a negative weight (the `w > 0` filter clips at zero — and
-    * weights below −0 cannot occur because `w_all` counts actual
-    * surviving copies plus this batch's adds). */
+    * never a negative weight (the `w > 0` filter drops every time
+    * whose ledger sum is zero or below). */
   private[graft] def e35MergedParts(sessT: String, adds: DataFrame,
       dels: DataFrame): (DataFrame, DataFrame) = {
     val spark = adds.sparkSession
@@ -2205,20 +2204,22 @@ object EventOps {
     * and a batch's ± deltas — [[e35MergedParts]] supplies the
     * semi-probed standing rows; maintainer #13's bootstrap supplies an
     * EMPTY frame (the first batch sweeps its own adds minus its own
-    * dels). Output at the ts_list STATE shape. */
+    * dels). Output at the ts_list STATE shape.
+    *
+    * One ±1 ledger (standing copies and adds +1, dels −1) is shuffled
+    * ONCE on user_id; the (user_id, us) weight sum, both windows and
+    * the session group-by all ride that partitioning, so the fold plans
+    * a single exchange. */
   private[graft] def e35Resweep(touched: DataFrame, adds: DataFrame,
       dels: DataFrame): DataFrame = {
     val spark = touched.sparkSession
     import spark.implicits._
-    val wAll = touched
-      .select($"user_id", explode($"ts_list").as("us"))
-      .unionByName(adds.select($"user_id", $"us"))
-      .groupBy($"user_id", $"us").agg(count(lit(1)).as("w_all"))
-    val wDel = dels.groupBy($"user_id", $"us").agg(count(lit(1)).as("w_del"))
-    val remaining = wAll
-      .join(wDel, Seq("user_id", "us"), "left")
-      .select($"user_id", $"us",
-        ($"w_all" - coalesce($"w_del", lit(0L))).as("w"))
+    val remaining = touched
+      .select($"user_id", explode($"ts_list").as("us"), lit(1L).as("d"))
+      .unionByName(adds.select($"user_id", $"us", lit(1L).as("d")))
+      .unionByName(dels.select($"user_id", $"us", lit(-1L).as("d")))
+      .repartition($"user_id")
+      .groupBy($"user_id", $"us").agg(sum($"d").as("w"))
       .filter($"w" > 0)
     val byUser = Window.partitionBy($"user_id").orderBy($"us")
     remaining

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Declares a streaming maintainer's state tables so [[EpochStore]] can
   * resolve, compact, and vacuum them. `snaps` are full-state tables the
@@ -58,15 +59,16 @@ final case class EpochTables(snaps: Map[String, Seq[String]],
   *  - Snapshot reads stay single-bucketed-table reads at every epoch,
   *    so the zero-exchange folds (q50's co-partitioned count fold) are
   *    preserved verbatim.
-  *  - Log reads are a UNION of base + deltas: the read amplification is
-  *    one relation per epoch since the last compaction, and the union
-  *    does not report its children's bucketing, so probe joins against
+  *  - A multi-part log (base + deltas) is read as ONE parquet relation
+  *    over all part paths: one scan, one file index, and the same plan
+  *    at every chain length. The read amplification is in FILES — one
+  *    directory per epoch since the last compaction — not in plan
+  *    nodes. The path read reports no bucketing, so probe joins against
   *    a multi-delta log pay an exchange a single-table log would not.
   *    [[EpochStore.compact]] is the OPTIMIZE that folds the chain back
   *    into one bucketed base (itself a normal transaction — crash-safe
   *    like any other epoch); run it on the same cadence a lake runs
-  *    compaction. Between compactions the trade is bounded and visible
-  *    in the plan, not silent.
+  *    compaction.
   *  - The pointer also carries the last committed `batchId`, closing
   *    the replay window for maintainers whose fold is purely ADDITIVE
   *    (q41's IVM dual): their state cannot reveal a re-delivered batch,
@@ -286,15 +288,15 @@ final class EpochStore(prefix: String, dir: String, tables: EpochTables) {
     *
     * A SINGLE part is read as its bucketed table — the partitioning
     * claim is true and downstream probes may ride it. MULTIPLE parts
-    * are read by PATH, without bucket metadata: Spark plans subset-key
-    * aggregates (and can plan joins) over a union of same-spec
-    * bucketed scans WITHOUT an exchange, but the union CONCATENATES
-    * the children's partitions — identical keys living in different
-    * deltas never meet, silently splitting groups / missing matches.
-    * (Observed: a (g,id,v) ledger fold over a four-delta chain kept a
-    * +1 and its −1 in separate output groups; EpochCommitSpec pins the
-    * regression.) Path reads carry no claim, so every downstream
-    * operator plans its own exchange. */
+    * are read as ONE parquet relation over all their paths, without
+    * bucket metadata: the parts' files are bucketed independently, so
+    * no claim holds across them. (A union of same-spec bucketed scans
+    * once made exactly that claim: Spark planned subset-key aggregates
+    * over it WITHOUT an exchange, but the union CONCATENATES the
+    * children's partitions — a (g,id,v) ledger fold over a four-delta
+    * chain kept a +1 and its −1 in separate output groups;
+    * EpochCommitSpec pins the regression.) A path read carries no
+    * claim, so every downstream operator plans its own exchange. */
   def log(sp: SparkSession, name: String): DataFrame = {
     val (e, b, _) = committed(sp)
     require(e > 0, s"EpochStore($tag): no committed epoch")
@@ -314,12 +316,11 @@ final class EpochStore(prefix: String, dir: String, tables: EpochTables) {
     if (parts.size == 1) resolve(sp, parts.head)
     else {
       // the catalog schema (via resolve) also covers EMPTY deltas,
-      // whose file-less directories defeat parquet schema inference
+      // whose file-less directories defeat parquet schema inference.
+      // One relation over every part path keeps the plan (and its
+      // generated code) the same at every chain length.
       val schema = resolve(sp, parts.head).schema
-      parts
-        .map(t => sp.read.schema(schema)
-          .parquet(tablePath(sp, t).toString))
-        .reduce(_ unionByName _)
+      sp.read.schema(schema).parquet(parts.map(tablePath(sp, _).toString): _*)
     }
   }
 
@@ -393,7 +394,8 @@ final class EpochStore(prefix: String, dir: String, tables: EpochTables) {
     *  - No committed epoch yet: `day1` runs as epoch 1.
     *  - Otherwise `unseen` — the batch minus what committed state
     *    already holds, the maintainer's own guard — is computed ONCE
-    *    (`localCheckpoint`, shared by the emptiness probe and the fold).
+    *    (`localCheckpoint`, whose job also counts the rows through an
+    *    `Observation`; the fold reads the checkpoint).
     *    Empty means a re-delivered batch: a TRUE no-op — no transaction
     *    opens, no epoch bump, no file churn. Otherwise `fold` gets the
     *    unseen rows and runs as the next epoch.
@@ -412,8 +414,11 @@ final class EpochStore(prefix: String, dir: String, tables: EpochTables) {
     }
     if (!exists(sp)) epoch(day1)
     else {
-      val fresh = unseen.localCheckpoint()
-      try { if (!fresh.isEmpty) epoch(fold(_, fresh)) }
+      // the row count rides the checkpoint's own job: no second job
+      // just to ask whether the checkpoint is empty
+      val rows = Observation()
+      val fresh = unseen.observe(rows, count(lit(1)).as("n")).localCheckpoint()
+      try { if (rows.get("n").asInstanceOf[Long] > 0L) epoch(fold(_, fresh)) }
       finally graft.operators.DedupOps.unpersistCheckpointed(fresh)
     }
   }
@@ -429,7 +434,7 @@ final class EpochStore(prefix: String, dir: String, tables: EpochTables) {
     * old epoch survive the compaction cycle (the grace window every
     * lake format's VACUUM documents — default 0 reclaims everything,
     * matching a RETAIN 0 HOURS vacuum). Run on a lake's compaction
-    * cadence (the read-amplification bound is one relation per epoch
+    * cadence (the read-amplification bound is one directory per epoch
     * since the last run).
     *
     * `logRetention` (r15 verdict item 4) applies a RETENTION filter to

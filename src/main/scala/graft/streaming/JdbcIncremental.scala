@@ -5,7 +5,8 @@ import graft.sources.{GraftDerbyDialect, Introspection, SqlDialect, SyncConf}
 
 /** High-watermark incremental JDBC reads — the micro-batch "CDC-ish"
   * source pattern: each poll reads only rows with watermark column value
-  * strictly above the last seen mark, and reports the new mark.
+  * strictly above the last seen mark and at most the new mark, which it
+  * reports.
   *
   * The reference can only re-snapshot whole tables; this plus
   * [[StreamSync.upsertBatch]] is the incremental pipeline:
@@ -18,26 +19,21 @@ object JdbcIncremental {
 
   final case class Increment(df: DataFrame, newMark: Option[Long], rows: Long)
 
-  /** One poll: rows with `watermarkCol` > `lastMark` (numeric marks).
-    * The bound is pushed into the source-side query, so the database
-    * does the filtering — each poll's cost is proportional to the new
-    * rows, not the table. */
+  /** One poll: rows with `lastMark` < `watermarkCol` <= the reported
+    * mark (numeric marks). The mark comes first, from a driver-side MAX
+    * on the source, and bounds the read above: a row committed after
+    * the probe belongs to the next poll, so it is applied once, and a
+    * re-read of `df` (say, after its cache is evicted) returns the same
+    * `rows`. Both bounds are pushed into the source-side query, so the
+    * database does the filtering — each poll's cost is proportional to
+    * the new rows, not the table. */
   def poll(spark: SparkSession, conf: SyncConf, table: String,
            watermarkCol: String, lastMark: Long,
            dialect: SqlDialect): Increment = {
     GraftDerbyDialect.ensureRegistered()
     val q = dialect.quote(table)
     val wc = dialect.quote(watermarkCol)
-    val sub = s"(SELECT * FROM $q WHERE $wc > $lastMark) AS incr"
-    val df = spark.read
-      .option("fetchsize", conf.fetchSize.toString)
-      .jdbc(conf.sourceUrl, sub, {
-        val p = new java.util.Properties()
-        conf.sourceProps.foreach { case (k, v) => p.setProperty(k, v) }
-        p
-      })
-    // the new mark comes from a driver-side MAX on the source — one
-    // tiny indexed query, never a Spark job
+    // one tiny indexed query, never a Spark job
     val mark = Introspection.withConnection(conf.sourceUrl, conf.sourceProps) { conn =>
       val rs = conn.createStatement().executeQuery(
         s"SELECT MAX($wc) FROM $q WHERE $wc > $lastMark")
@@ -47,9 +43,17 @@ object JdbcIncremental {
         if (rs.wasNull()) None else Some(m)
       } finally rs.close()
     }
-    // cache before counting: the count and the downstream apply must see
-    // the SAME rows (and pay one source read), not two reads racing
-    // concurrent commits
+    val upper = mark.getOrElse(lastMark)
+    val sub = s"(SELECT * FROM $q WHERE $wc > $lastMark AND $wc <= $upper) AS incr"
+    val df = spark.read
+      .option("fetchsize", conf.fetchSize.toString)
+      .jdbc(conf.sourceUrl, sub, {
+        val p = new java.util.Properties()
+        conf.sourceProps.foreach { case (k, v) => p.setProperty(k, v) }
+        p
+      })
+    // cache before counting: the count and the downstream apply share
+    // one source read
     val cached = if (mark.isDefined) df.persist() else df
     Increment(cached, mark, if (mark.isEmpty) 0L else cached.count())
   }

@@ -1,8 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,37 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class TablesSchemaCacheSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   private val sf = SharedSpark.sf
-  private val MarkerProp = "graft.spec.jobMarker"
-
-  /** Spark jobs started while `body` runs. A marker job before and after
-    * brackets them: the listener bus delivers events in order, so once the
-    * closing marker arrives every job of `body` has been seen. */
-  private def jobsDuring(session: SparkSession)(body: => Unit): Int = {
-    val sc = session.sparkContext
-    val seen = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty(MarkerProp))).getOrElse(""))
-    }
-    def marker(tag: String): Unit = {
-      sc.setLocalProperty(MarkerProp, tag)
-      try session.range(1).collect() finally sc.setLocalProperty(MarkerProp, null)
-    }
-    def next(): String = {
-      val s = seen.poll(60, TimeUnit.SECONDS)
-      assert(s != null, "listener bus delivered no job start within 60 s")
-      s
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("begin")
-      body
-      marker("end")
-      while (next() != "begin") {}
-      Iterator.continually(next()).takeWhile(_ != "end").size
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Copy the single parquet file `df` writes to `dir/name.parquet`,
     * replacing what is there: an overwrite in place at the same path. */
@@ -61,8 +28,8 @@ class TablesSchemaCacheSpec extends AnyFunSuite {
     val h09 = SparkEntry.queries("h09_profit_by_nation")
     Tables(spark, sf, "lineitem")
     h09(spark, sf) // infers the other tables, builds h09's standing state
-    assert(jobsDuring(spark)(Tables(spark, sf, "lineitem")) == 0)
-    assert(jobsDuring(spark)(h09(spark, sf)) == 0)
+    assert(SparkJobs.during(spark)(Tables(spark, sf, "lineitem")) == 0)
+    assert(SparkJobs.during(spark)(h09(spark, sf)) == 0)
   }
 
   test("overwriting a file at the same path with an extra column is seen") {
@@ -74,14 +41,14 @@ class TablesSchemaCacheSpec extends AnyFunSuite {
     val next = Tables(spark, dir.toString, "widget")
     assert(next.columns.toSeq == Seq("id", "x", "y"))
     assert(next.as[(Long, String, Int)].collect().toSeq == Seq((3L, "c", 7)))
-    assert(jobsDuring(spark)(Tables(spark, dir.toString, "widget")) == 0)
+    assert(SparkJobs.during(spark)(Tables(spark, dir.toString, "widget")) == 0)
   }
 
   test("a new session infers on its own first read") {
     Tables(spark, sf, "lineitem")
     val child = spark.newSession()
-    assert(jobsDuring(child)(Tables(child, sf, "lineitem")) == 1)
-    assert(jobsDuring(child)(Tables(child, sf, "lineitem")) == 0)
+    assert(SparkJobs.during(child)(Tables(child, sf, "lineitem")) == 1)
+    assert(SparkJobs.during(child)(Tables(child, sf, "lineitem")) == 0)
   }
 
   test("changing a parquet conf of the session infers again") {
@@ -91,7 +58,7 @@ class TablesSchemaCacheSpec extends AnyFunSuite {
     val child = spark.newSession()
     assert(Tables.schemaOf(child, events)("ts").dataType == TimestampNTZType)
     child.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    assert(jobsDuring(child)(assert(
+    assert(SparkJobs.during(child)(assert(
       Tables.schemaOf(child, events)("ts").dataType == TimestampType)) == 1)
   }
 }
