@@ -8,12 +8,17 @@ outDir/oracle_sql.json, runs each oracle SQL in DuckDB over views named
 after the parquet tables in sfDir, then compares: columns sorted by name,
 rows sorted by all columns, exact value equality (with a float report on
 mismatch). Exit 1 if any query mismatches.
+
+Each summary entry whose oracle ran carries `oracle_s`: the DuckDB
+execution plus fetch time of that oracle (including the row sort that
+normalises it); the 5 slowest are printed at the end.
 """
 import glob
 import json
 import math
 import os
 import sys
+import time
 
 import duckdb
 
@@ -49,10 +54,12 @@ def eq(a, b):
 SUMMARY_PATH = sys.argv[3] if len(sys.argv) > 3 else None
 summary = {}
 
-def record(name, status, rows, detail=""):
+def record(name, status, rows, detail="", oracle_s=None):
     summary[name] = {"status": status, "rows": rows}
     if detail:
         summary[name]["detail"] = detail
+    if oracle_s is not None:
+        summary[name]["oracle_s"] = round(oracle_s, 3)
 
 fail = 0
 results = sorted(os.listdir(OUT_DIR))
@@ -65,23 +72,28 @@ for name in results:
         print(f"SKIP {name}: no oracle (rows-only check: {len(got_rel)} rows)")
         record(name, "skip_rows_only", len(got_rel))
         continue
+    t0 = time.monotonic()
     try:
         exp_rel = con.sql(oracles[name])
     except Exception as e:
         print(f"FAIL {name}: oracle SQL error: {e}")
-        record(name, "fail", -1, f"oracle SQL error: {e}")
+        record(name, "fail", -1, f"oracle SQL error: {e}",
+               time.monotonic() - t0)
         fail += 1
         continue
-    gc, gr = norm(got_rel)
     ec, er = norm(exp_rel)
+    oracle_s = time.monotonic() - t0
+    gc, gr = norm(got_rel)
     if gc != ec:
         print(f"FAIL {name}: columns differ spark={gc} oracle={ec}")
-        record(name, "fail", len(gr), f"columns differ spark={gc} oracle={ec}")
+        record(name, "fail", len(gr), f"columns differ spark={gc} oracle={ec}",
+               oracle_s)
         fail += 1
         continue
     if len(gr) != len(er):
         print(f"FAIL {name}: row count spark={len(gr)} oracle={len(er)}")
-        record(name, "fail", len(gr), f"row count spark={len(gr)} oracle={len(er)}")
+        record(name, "fail", len(gr), f"row count spark={len(gr)} oracle={len(er)}",
+               oracle_s)
         fail += 1
         continue
     bad = None
@@ -98,11 +110,12 @@ for name in results:
         if isinstance(x, float) and isinstance(y, float):
             delta = f" (delta={x - y:.3e})"
         print(f"FAIL {name}: row {i} col {c}: spark={x!r} oracle={y!r}{delta}")
-        record(name, "fail", len(gr), f"row {i} col {c}: spark={x!r} oracle={y!r}")
+        record(name, "fail", len(gr), f"row {i} col {c}: spark={x!r} oracle={y!r}",
+               oracle_s)
         fail += 1
     else:
         print(f"OK   {name}: {len(gr)} rows, {len(gc)} cols")
-        record(name, "ok", len(gr))
+        record(name, "ok", len(gr), oracle_s=oracle_s)
 
 # A crashed query is an EXPLICIT fail, not an absent key: Verify swallows
 # per-query exceptions to stderr (driver contract), so the only trace of a
@@ -130,6 +143,13 @@ if SUMMARY_PATH:
     with open(SUMMARY_PATH, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(f"summary written to {SUMMARY_PATH}")
+
+timed = sorted(((v["oracle_s"], n) for n, v in summary.items()
+                if "oracle_s" in v), reverse=True)
+if timed:
+    print("\nslowest oracles (DuckDB execution + fetch):")
+    for secs, name in timed[:5]:
+        print(f"  {secs:8.3f} s  {name}")
 
 print(f"\n{'FAILED ' + str(fail) if fail else 'ALL GREEN'} "
       f"({len([n for n in results if os.path.isdir(f'{OUT_DIR}/{n}')])} results)")

@@ -9,6 +9,9 @@ import org.apache.spark.sql.SparkSession
   * sort-merge joins to broadcast when a side turns out small, splitting
   * skewed partitions), which is the main knob that keeps these plans honest
   * when the data is 1000× bigger than the test scale factors.
+  *
+  * Every session it builds carries [[GraftExtensions]], so graft's native
+  * SQL functions resolve in it and in its `newSession()` children.
   */
 object GraftSession {
   def builder(master: String = s"local[${defaultCpus}]",
@@ -27,6 +30,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheMaxEntries.toString)
+      .withExtensions(new GraftExtensions)
 
   /** Capacity of Spark's JVM-wide cache of generated classes
     * (`spark.sql.codegen.cache.maxEntries`, 100 by default). graft

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -50,12 +49,4 @@ case class DoubleSortKey(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): DoubleSortKey =
     copy(child = newChild)
-}
-
-object DoubleSortKey {
-  /** Register `double_sort_key(d)` as a temp SQL function. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "double_sort_key", (exprs: Seq[Expression]) => DoubleSortKey(exprs.head),
-      "built-in")
 }

@@ -54,13 +54,9 @@ object EngineFns {
     java.lang.Long.parseLong(d.take(8).map("%02x".format(_)).mkString.take(15), 16)
   }
 
-  /** Register the engine's native expressions on a session. Idempotent;
-    * query builders that use [[dot]]/[[cosine]] call this first. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
-    VecDot.register(spark)
-
   /** Sequential left-fold dot product of two array<double> columns via
-    * the native [[VecDot]] expression (requires [[registerAll]]).
+    * the native [[VecDot]] expression (`vec_dot`, resolved by every
+    * session [[graft.GraftSession]] builds).
     * DuckDB equivalent: [[sqlDot]]. Bit-identical across engines — and to
     * the declarative aggregate/zip_with fold — because all fold left in
     * element order with double adds/multiplies. */

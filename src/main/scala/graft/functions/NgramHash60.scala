@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -75,45 +74,4 @@ case class NgramHash60(child: Expression, n: Int)
 object NgramHash60 {
   private val digest: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  /** Register `ngram_hashes(str, n)` as a temp SQL function; `n` must be
-    * an integer literal. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_hashes",
-      (exprs: Seq[Expression]) =>
-        NgramHash60(exprs.head,
-          GraftFnArgs.literalInts("ngram_hashes", exprs, arity = 2).head),
-      "built-in")
-}
-
-/** Shared builder-time validation for graft's literal-argument native
-  * functions: a wrong arity or a non-foldable/non-integer trailing
-  * argument must fail as an AnalysisException naming the contract, not
-  * as an IndexOutOfBounds/ClassCast at plan time (r14 ADVICE). */
-private[functions] object GraftFnArgs {
-  /** Validates `exprs` has exactly `arity` members with every member
-    * after the first a foldable integer literal; returns those
-    * literal values. */
-  def literalInts(fn: String, exprs: Seq[Expression], arity: Int): Seq[Int] = {
-    // USER_RAISED_EXCEPTION renders the message verbatim as a caller
-    // error (SQLSTATE P0001); INTERNAL_ERROR would present a bad arity
-    // as an engine bug ("please report") — r15 ADVICE
-    def fail(msg: String): Nothing =
-      throw new org.apache.spark.sql.AnalysisException(
-        "USER_RAISED_EXCEPTION",
-        Map("errorMessage" ->
-          s"$fn: $msg — expected $fn(str${", <int literal>" * (arity - 1)})"),
-        None)
-    if (exprs.length != arity)
-      fail(s"takes $arity arguments, got ${exprs.length}")
-    exprs.tail.zipWithIndex.map { case (e, i) =>
-      if (!e.foldable) fail(s"argument ${i + 2} must be a literal")
-      e.eval() match {
-        case n: java.lang.Number => n.intValue()
-        case v => fail(s"argument ${i + 2} must be an integer literal, " +
-          s"got $v")
-      }
-    }
-  }
 }

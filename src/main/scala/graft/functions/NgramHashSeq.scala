@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -74,13 +73,4 @@ case class NgramHashSeq(child: Expression, n: Int)
 object NgramHashSeq {
   private val digest: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  /** Register `ngram_hash_seq(str, n)` as a temp SQL function; `n` must
-    * be an integer literal. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_hash_seq",
-      (exprs: Seq[Expression]) => NgramHashSeq(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -58,12 +57,4 @@ case class PolyHash(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): PolyHash =
     copy(child = newChild)
-}
-
-object PolyHash {
-  /** Register `polyhash(str)` as a temp SQL function on the session so it
-    * is usable from `expr`/`spark.sql`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "polyhash", (exprs: Seq[Expression]) => PolyHash(exprs.head), "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -69,9 +68,4 @@ case class TrigramHash60(child: Expression)
 object TrigramHash60 {
   private val digest: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  /** Register `trigram_hashes(str)` as a temp SQL function. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "trigram_hashes", (exprs: Seq[Expression]) => TrigramHash60(exprs.head), "built-in")
 }

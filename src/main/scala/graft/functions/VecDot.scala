@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -47,11 +46,4 @@ case class VecDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)
-}
-
-object VecDot {
-  /** Register `vec_dot(a, b)` as a temp SQL function. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1)), "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -103,15 +102,4 @@ case class WinnowHash60(child: Expression, n: Int, w: Int)
 object WinnowHash60 {
   private val digest: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  /** Register `winnow_hashes(str, n, w)` as a temp SQL function; `n`
-    * and `w` must be integer literals. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_hashes",
-      (exprs: Seq[Expression]) => {
-        val args = GraftFnArgs.literalInts("winnow_hashes", exprs, arity = 3)
-        WinnowHash60(exprs.head, args(0), args(1))
-      },
-      "built-in")
 }

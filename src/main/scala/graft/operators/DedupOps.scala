@@ -98,7 +98,6 @@ object DedupOps {
     * is cross-multiplied integer math: 10*shared >= 6*union. */
   def d3NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.TrigramHash60.register(spark)
     // Grams are hashed to 60-bit ints BEFORE the self-join (single-pass
     // native expression), so the shuffle carries (long, long, int) instead
     // of ~30-byte gram strings; the per-doc gram count rides along to
@@ -160,7 +159,6 @@ object DedupOps {
   private def gramSetsFrom(docsDf: DataFrame): DataFrame = {
     val spark = docsDf.sparkSession
     import spark.implicits._
-    graft.functions.TrigramHash60.register(spark)
     docsDf.select($"doc_id",
       array_distinct(transform(expr("trigram_hashes(text)"),
         x => pmod(x, lit(P31)))).as("hs"))
@@ -348,7 +346,6 @@ object DedupOps {
     * a fixed-point micro projection. */
   def d5CosineDup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     // Norms are computed once per vector before the pair join (N folds
     // instead of 2·pairs), so each candidate pair costs one dot product.
     val e = emb(spark, dir)
@@ -396,7 +393,6 @@ object DedupOps {
 
   def d6Simhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.TrigramHash60.register(spark)
     val tok = docs(spark, dir)
       .select($"doc_id", explode(expr("trigram_hashes(text)")).as("h"))
     val bitSums = (0 until SimhashBits).map { j =>
@@ -839,7 +835,6 @@ object DedupOps {
   private[graft] def cappedCandidates(docsDf: DataFrame, dfCap: Int): DataFrame = {
     val spark = docsDf.sparkSession
     import spark.implicits._
-    graft.functions.TrigramHash60.register(spark)
     val raw = docsDf.select($"doc_id", explode(expr("trigram_hashes(text)")).as("gh"))
     // DOCUMENT frequency, not occurrence frequency: a single document
     // repeating a gram must not evict that gram corpus-wide. distinct
@@ -914,7 +909,6 @@ object DedupOps {
     * cells and restores join parallelism. */
   def d12CosineDupKmeans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val e = emb(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))
@@ -1196,7 +1190,6 @@ object DedupOps {
 
   def d18CosineDupHotsplit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     // the raw corpus frame is NOT cached (array columns defeat the
     // columnar cache — s6's measured anti-lesson); the expensive
     // intermediate, the refined assignment, is checkpointed inside
@@ -1344,7 +1337,6 @@ object DedupOps {
   private[operators] def d19From(d: DataFrame): DataFrame = {
     val spark = d.sparkSession
     import spark.implicits._
-    graft.functions.NgramHashSeq.register(spark)
     val grams = d.select($"doc_id",
       posexplode(expr(s"ngram_hash_seq(text, $D19N)")).as(Seq("pos", "h")))
     val dup = grams.select($"doc_id", $"h").distinct()

@@ -1947,44 +1947,13 @@ object EventOps {
       .select($"user_id", $"start_us", $"end_us", $"n_events", $"ts_list")
   }
 
-  /** Touched-users-only retraction: exact multiset subtraction of the
-    * deletion feed (user_id, us), then a re-sweep over the surviving
-    * weighted times. Spurious deletions (no matching event) are
-    * no-ops; a user whose every event is deleted vanishes, exactly as
-    * a from-scratch build over the surviving corpus drops them. */
-  private[graft] def e34Retract(sessT: String, del: DataFrame): DataFrame = {
-    val spark = del.sparkSession
-    import spark.implicits._
-    val standing = spark.table(sessT)
-    val users = del.select($"user_id").distinct()
-      .repartition(graft.sources.LayoutOps.tableBuckets(spark, sessT),
-        $"user_id")
-    val touched = standing.join(users, Seq("user_id"), "left_semi")
-    val untouched = standing.join(users, Seq("user_id"), "left_anti")
-      .select($"user_id", $"start_us", $"end_us", $"n_events")
-    val wAll = touched
-      .select($"user_id", explode($"ts_list").as("us"))
-      .groupBy($"user_id", $"us").agg(count(lit(1)).as("w_all"))
-    val wDel = del.groupBy($"user_id", $"us").agg(count(lit(1)).as("w_del"))
-    val remaining = wAll
-      .join(wDel, Seq("user_id", "us"), "left")
-      .select($"user_id", $"us",
-        ($"w_all" - coalesce($"w_del", lit(0L))).as("w"))
-      .filter($"w" > 0)
-    val byUser = Window.partitionBy($"user_id").orderBy($"us")
-    val resw = remaining
-      .withColumn("prev", lag($"us", 1).over(byUser))
-      .withColumn("new_sess",
-        when($"prev".isNull || $"us" - $"prev" > E32GapUs, 1).otherwise(0))
-      .withColumn("sid", sum($"new_sess").over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy($"user_id", $"sid")
-      .agg(min($"us").as("start_us"), max($"us").as("end_us"),
-        sum($"w").as("n_events"))
-      .select($"user_id", $"start_us", $"end_us", $"n_events")
-    e32Shape(resw).unionByName(e32Shape(untouched))
-      .orderBy($"user_id", $"sess_id")
-  }
+  /** Touched-users-only retraction: e35's mixed fold with no adds — the
+    * deletion feed (user_id, us) enters the ±1 ledger at −1, so a
+    * subtraction is exact per copy, spurious deletions are no-ops and
+    * a user whose every event is deleted vanishes, exactly as a
+    * from-scratch build over the surviving corpus drops them. */
+  private[graft] def e34Retract(sessT: String, del: DataFrame): DataFrame =
+    e35Upsert(sessT, del.limit(0), del)
 
   // The oracle is the from-scratch sessionization over the SURVIVING
   // corpus (events minus the md5-picked deletions — the same 60-bit

@@ -384,7 +384,6 @@ object MultimodalOps {
   def m7CrossModalRetrieval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.EngineFns._
-    registerAll(spark)
     val media = Tables(spark, dir, "documents")
       .select($"doc_id",
         when($"n_chars" % 3 === 0, "image/fake")

@@ -75,7 +75,6 @@ object PercentileOps {
     require(!keys.exists(k => k == "frac" || k == "pct" || k.startsWith("__pct_")),
       s"exactPercentiles: key names $keys collide with output/internal columns " +
         "(reserved: frac, pct, __pct_*)")
-    graft.functions.DoubleSortKey.register(df.sparkSession)
     val kcols: Seq[Column] = keys.map(col)
     val rows = df.select(kcols :+ col(value).cast("double").as("__pct_v"): _*)
       .filter(col("__pct_v").isNotNull)

@@ -505,7 +505,6 @@ object PipelineOps {
   private def p8Funnel(spark: SparkSession, dir: String,
                        fromStandingState: Boolean): DataFrame = {
     import spark.implicits._
-    graft.functions.NgramHash60.register(spark)
     val toks = tokens($"text")
     val nTok = size(toks)
     val nStop = size(filter(toks, tk => tk.isInCollection(TextOps.stopwords)))
@@ -772,7 +771,6 @@ object PipelineOps {
   private[operators] def p12CorpusFunnelPlan(spark: SparkSession, dir: String,
                                              checkpoint: Boolean): DataFrame = {
     import spark.implicits._
-    graft.functions.NgramHash60.register(spark)
     val BUDGET = 1000.0
     val toks = tokens($"text")
     val nTok = size(toks)

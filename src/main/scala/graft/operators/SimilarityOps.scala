@@ -34,7 +34,6 @@ object SimilarityOps {
     * is a window over the broadcast-joined score stream. */
   def s1KnnBrute(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val e = emb(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))
@@ -74,7 +73,6 @@ object SimilarityOps {
     * is the shape that replaces the O(N·Q) scan at 100 TB. */
   def s2KnnLsh(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     // bit p = sign of <v, w_p>, w_p = ±1 per dim from md5("p,d") parity.
     // The planes are CONSTANTS: computed once on the driver and baked in
     // as array literals, so the per-row work is PLANES dot products (the
@@ -163,7 +161,6 @@ object SimilarityOps {
   private def ivfSearch(spark: SparkSession, dir: String,
                         candFilter: Column): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val e = emb(spark, dir)
       .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))
@@ -312,7 +309,6 @@ object SimilarityOps {
     * carries a raw vector. */
   def s4KnnPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val SUBS = 8
     val SD = 8 // dims per subspace
     val sqd = (a: Column, b: Column) =>
@@ -470,7 +466,6 @@ object SimilarityOps {
   private def s5AdcScored(spark: SparkSession, dir: String)
       : (DataFrame, Seq[(Long, Array[Double], Double)]) = {
     import spark.implicits._
-    registerAll(spark)
     val SUBS = 8
     val SD = 8
     val NPROBE = 4
@@ -704,7 +699,6 @@ object SimilarityOps {
     * quantizes to 0 on both engines. */
   def s9KnnSq8(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val e = emb(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val mm = e.select(posexplode($"v").as(Seq("d0", "dv")))
@@ -1076,7 +1070,6 @@ object SimilarityOps {
     * multiply each side), with φ itself an exact integer sum. */
   def s6KnnKmeans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val NPROBE = 4
     // NOT persisted: the array<double> column defeats the columnar
     // cache (generic encoding for nested types — measured s6 1.7 s →
@@ -1319,7 +1312,6 @@ object SimilarityOps {
 
   def s7KnnIvfPqKmeans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val NPROBE = 4
     val SUBS = S7Subs
     val SD = S7Sd
@@ -1495,7 +1487,6 @@ object SimilarityOps {
     * saved index is a pure materialization of s7's training. */
   def s10KnnServe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     s10EnsureIndex(spark, dir)
     val qs: Seq[(Long, Array[Double])] = emb(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
@@ -1511,7 +1502,6 @@ object SimilarityOps {
     * streaming) never trains. */
   private[graft] def s10EnsureIndex(spark: SparkSession, dir: String): Unit = {
     import spark.implicits._
-    registerAll(spark)
     val SUBS = S7Subs
     val SD = S7Sd
     val centT = graft.sources.LayoutOps.stateTable("graft_state_s7_cent", dir)
@@ -1623,7 +1613,6 @@ object SimilarityOps {
     * tonight's rebuild. */
   def s11IndexUpdate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val NPROBE = 4
     val SUBS = S7Subs
     val SD = S7Sd
@@ -1803,7 +1792,6 @@ object SimilarityOps {
 
   def s14KnnGraph(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val e = emb(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))
@@ -1885,7 +1873,6 @@ object SimilarityOps {
     * query set, one corpus scan). */
   def s15HybridRrf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val lex = TextOps.t20Bm25(spark, dir)
       .select($"qid", $"doc_id", $"rank")
     val e = emb(spark, dir)
@@ -1982,7 +1969,6 @@ object SimilarityOps {
     * indistinguishable from never having indexed the rows. */
   def s16IndexDelete(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     s10EnsureIndex(spark, dir)
     val codesT = s16EnsureCopy(spark, dir)
     s16CompactDeletes(spark, dir)
@@ -2097,7 +2083,6 @@ object SimilarityOps {
     * shuffle; the recall aggregate is level-count-sized. */
   def s17TuningCurve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val e = emb(spark, dir)
       .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))
@@ -2217,7 +2202,6 @@ object SimilarityOps {
     * so the report certifies the index layout itself. */
   def s18IndexHealth(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     s10EnsureIndex(spark, dir)
     val codesT = graft.sources.LayoutOps.stateTable("graft_state_s7_codes", dir)
     val sz = spark.table(codesT).groupBy($"cell")
@@ -2291,7 +2275,6 @@ object SimilarityOps {
 
   def s19KnnGraphHybrid(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val e = emb(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))
@@ -2398,7 +2381,6 @@ object SimilarityOps {
 
   def s20IndexRebalance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val codesT = s20EnsureRebalanced(spark, dir)
     val sz = spark.table(codesT).groupBy($"cell")
       .agg(count(lit(1)).as("n_vectors"))
@@ -2792,7 +2774,6 @@ object SimilarityOps {
 
   def s21IndexCompact(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val codesT = s21EnsureFragmented(spark, dir)
     s21CompactCells(spark, dir)
     val qs: Seq[(Long, Array[Double])] = emb(spark, dir)
@@ -2826,7 +2807,6 @@ object SimilarityOps {
     * of the reduction, pinned. */
   def s22KnnMips(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     s22From(emb(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v")))
   }
@@ -2837,7 +2817,6 @@ object SimilarityOps {
   private[operators] def s22From(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    registerAll(spark)
     val q = e.filter($"vec_id" < NQUERIES)
       .select($"vec_id".as("qid"), $"v".as("qv"))
     val w = Window.partitionBy($"qid").orderBy($"ip".desc, $"nid".asc)
@@ -2857,7 +2836,6 @@ object SimilarityOps {
   private[operators] def s22AugFrom(e0: DataFrame): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    registerAll(spark)
     val e = e0.withColumn("nrm2", dot($"v", $"v"))
     // one scalar probe: the max squared norm (metadata by construction)
     val m2 = e.agg(max($"nrm2")).first().getDouble(0)
@@ -2911,7 +2889,6 @@ object SimilarityOps {
     * health check wants next to s13's recall. */
   def s23ClusterEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    registerAll(spark)
     val e = emb(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"),
         $"label")

@@ -169,7 +169,6 @@ object TextOps {
     * Catalyst expression (codegen'd byte fold — no UDF boxing). */
   def t6PolyHash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.PolyHash.register(spark)
     docs(spark, dir)
       .select($"doc_id", expr("polyhash(text)").as("ph"))
       .orderBy($"doc_id")
@@ -368,7 +367,6 @@ object TextOps {
                                  checkpoint: Boolean = true): DataFrame = {
     val spark = docsDf.sparkSession
     import spark.implicits._
-    graft.functions.NgramHash60.register(spark)
     val sh = docsDf
       .select($"doc_id", explode(expr("ngram_hashes(text, 8)")).as("h"))
       .persist()
@@ -463,7 +461,6 @@ object TextOps {
     * as 60-bit [[graft.functions.NgramHash60]] hashes. */
   def t11Decontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.NgramHash60.register(spark)
     val sh = docs(spark, dir)
       .select($"doc_id", $"source", explode(expr("ngram_hashes(text, 8)")).as("h"))
     val benchSet = sh.filter($"source" === "src0").select($"h").distinct()
@@ -581,7 +578,6 @@ object TextOps {
   private[graft] def familiarityOf(docsDf: DataFrame, topN: Int): DataFrame = {
     val spark = docsDf.sparkSession
     import spark.implicits._
-    graft.functions.TrigramHash60.register(spark)
     val grams = docsDf
       .select($"doc_id", explode(expr("trigram_hashes(text)")).as("gh"))
     val hot = grams.groupBy($"gh").agg(count(lit(1)).as("df"))
@@ -1465,7 +1461,6 @@ object TextOps {
     * all-pairs anywhere in the lineage). */
   def t23OverlapRisk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.NgramHash60.register(spark)
     // The split is FROZEN standing state, not a per-query derivation: a
     // train/holdout assignment must never drift between runs, so the
     // first call persists p13's (deterministic) output and every later
@@ -1809,7 +1804,6 @@ object TextOps {
       cap: Int = T28FpCap, checkpoint: Boolean = true): DataFrame = {
     val spark = docsDf.sparkSession
     import spark.implicits._
-    graft.functions.WinnowHash60.register(spark)
     val fp = docsDf.select($"doc_id",
         explode(expr(s"winnow_hashes(text, $T28Gram, $T28Win)")).as("fp"))
       .persist()

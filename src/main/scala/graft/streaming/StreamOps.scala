@@ -350,7 +350,6 @@ object StreamOps {
   def corpusIngestFilter(docsStream: DataFrame,
                          benchShingles: Array[Long]): DataFrame = {
     val sp = docsStream.sparkSession
-    graft.functions.NgramHash60.register(sp)
     import sp.implicits._
     val toks = split($"text", " ")
     val nTok = size(toks)

@@ -1,38 +1,17 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
+import graft.functions.TrigramHash60
 
-/** The extensions entry point must make every native function resolvable
-  * with NO per-query register() call, including in child sessions (the
-  * property temp-function registration lacks). Uses its own isolated
-  * SparkSession — extensions apply at session build time. */
+/** Every session [[GraftSession]] builds carries [[GraftExtensions]], so
+  * each native function resolves with NO per-query call — including in
+  * `newSession()` children, which inherit the parent's extensions. Runs
+  * on the shared session: it is built like every other graft session. */
 class GraftExtensionsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    // getOrCreate would silently reuse another suite's default session and
-    // drop the extensions — clear, build fresh, then restore the previous
-    // default so the shared-session suites are unaffected.
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      // the JVM-wide codegen cache is sized by the first session that
-      // generates code; if this suite runs first it must not pin it at
-      // Spark's default (see CodegenCacheSpec)
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.CodegenCacheMaxEntries.toString)
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    prevDefault.foreach(SparkSession.setDefaultSession)
-    SparkSession.clearActiveSession()
-    s
-  }
+  import SharedSpark.spark
 
   test("all native functions resolve without register() calls") {
     val r = spark.sql(
@@ -49,17 +28,57 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(r.getDouble(3) == 11.0)
   }
 
-  test("injected functions survive newSession(), temp registration doesn't") {
+  test("all 7 native functions resolve in a fresh newSession() child") {
+    val calls = Seq(
+      "trigram_hashes" -> "trigram_hashes('a b c d')",
+      "ngram_hashes" -> "ngram_hashes('x y z', 3)",
+      "ngram_hash_seq" -> "ngram_hash_seq('a b c d', 2)",
+      "winnow_hashes" -> "winnow_hashes('a b c d e f', 2, 3)",
+      "polyhash" -> "polyhash('abc')",
+      "vec_dot" -> "vec_dot(array(1.0d), array(2.0d))",
+      "double_sort_key" -> "double_sort_key(1.5d)")
+    assert(calls.map(_._1).toSet == GraftExtensions.functions.map(_._1).toSet)
     val child = spark.newSession()
-    val r = child.sql("SELECT ngram_hashes('x y z', 3) AS g").collect()(0)
-    assert(r.getSeq[Long](0).length == 1)
+    calls.foreach { case (name, call) =>
+      val r = child.sql(s"SELECT $call AS v").collect()(0)
+      assert(!r.isNullAt(0), s"$name returned null in a child session")
+    }
+    val seq = child.sql("SELECT ngram_hash_seq('a b c d', 2)").collect()(0)
+    assert(seq.getSeq[Long](0).length == 3)
   }
 
-  test("injected trigram_hashes matches the temp-registered expression") {
+  test("building operator plans leaves every injected builder in place") {
     import spark.implicits._
-    graft.functions.TrigramHash60.register(spark)
-    val rows = Seq("the quick brown fox jumps").toDF("text")
-      .selectExpr("trigram_hashes(text) AS g").collect()
-    assert(rows(0).getSeq[Long](0).length == 3)
+    val registry = spark.sessionState.functionRegistry
+    def builders = GraftExtensions.functions.map { case (name, _, _) =>
+      registry.lookupFunctionBuilder(FunctionIdentifier(name))
+    }
+    val before = builders
+    assert(before.forall(_.isDefined))
+    Seq("d3_ngram_jaccard", "d5_cosine_dup", "d19_dupspan_coverage",
+      "t6_polyhash", "t11_decontaminate", "t28_winnow_pairs")
+      .foreach(q => SparkEntry.queries(q)(spark, SharedSpark.sf))
+    graft.operators.PercentileOps.exactPercentiles(
+      Seq(("a", 1.0)).toDF("k", "v"), Seq("k"), "v", Seq(0.5))
+    builders.zip(before).zip(GraftExtensions.functions).foreach {
+      case ((now, was), (name, _, _)) =>
+        assert(now.get eq was.get, s"$name was re-registered by a plan build")
+    }
+  }
+
+  test("SQL-resolved trigram_hashes matches the directly built " +
+      "TrigramHash60 expression") {
+    import spark.implicits._
+    val text = "the quick brown fox jumps"
+    val df = Seq(text).toDF("text").selectExpr("trigram_hashes(text) AS g")
+    val resolved = df.queryExecution.analyzed.expressions.flatMap(_.collect {
+      case t: TrigramHash60 => t
+    })
+    val attr = df.queryExecution.analyzed.children.head.output.head
+    assert(resolved == Seq(TrigramHash60(attr)))
+    val direct = TrigramHash60(Literal(text)).eval()
+      .asInstanceOf[ArrayData].toLongArray().toSeq
+    assert(direct.length == 3)
+    assert(df.collect()(0).getSeq[Long](0).sorted == direct.sorted)
   }
 }

@@ -8,7 +8,6 @@ class DoubleSortKeySpec extends AnyFunSuite {
 
   test("double_sort_key: signed long order equals double sort order") {
     import spark.implicits._
-    DoubleSortKey.register(spark)
     // tricky ladder: infinities, huge/tiny magnitudes, both zeros, NaN
     val ladder = Seq(
       Double.NegativeInfinity, -1e300, -2.0, -1.0, -1e-300,

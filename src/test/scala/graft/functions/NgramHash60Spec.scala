@@ -21,8 +21,6 @@ class NgramHash60Spec extends AnyFunSuite {
   ).toDF("text")
 
   test("n=3 equals trigram_hashes on every text") {
-    TrigramHash60.register(spark)
-    NgramHash60.register(spark)
     val rows = texts.select(
       expr("trigram_hashes(text)").as("t3"),
       expr("ngram_hashes(text, 3)").as("n3")).collect()
@@ -30,7 +28,6 @@ class NgramHash60Spec extends AnyFunSuite {
   }
 
   test("n=8 equals the composed distinct/transform/md5 column formulation") {
-    NgramHash60.register(spark)
     val toks = split($"text", " ")
     val composed = when(size(toks) < 8, array().cast("array<string>"))
       .otherwise(array_distinct(transform(
@@ -45,7 +42,6 @@ class NgramHash60Spec extends AnyFunSuite {
   }
 
   test("n=1 hashes every distinct token") {
-    NgramHash60.register(spark)
     val r = Seq("a b a c").toDF("text")
       .select(expr("ngram_hashes(text, 1)")).collect()(0).getSeq[Long](0)
     assert(r.length == 3)
@@ -53,19 +49,26 @@ class NgramHash60Spec extends AnyFunSuite {
 
   test("arity/literal mistakes surface as USER_RAISED_EXCEPTION (a " +
       "caller error), never INTERNAL_ERROR's 'please report' framing") {
-    NgramHash60.register(spark)
     val bad = Seq(
       "select ngram_hashes(text) from t16",          // arity
       "select ngram_hashes(text, 2, 3) from t16",    // arity
-      "select ngram_hashes(text, text) from t16")    // non-literal n
+      "select ngram_hashes(text, text) from t16",    // non-literal n
+      "select ngram_hash_seq(text) from t16",        // arity
+      "select ngram_hash_seq(text, 2, 3) from t16",  // arity
+      "select ngram_hash_seq(text, text) from t16",  // non-literal n
+      "select winnow_hashes(text, 3) from t16",      // arity
+      "select winnow_hashes(text, 3, 4, 5) from t16", // arity
+      "select winnow_hashes(text, text, 4) from t16", // non-literal n
+      "select winnow_hashes(text, 3, text) from t16") // non-literal w
     texts.createOrReplaceTempView("t16")
     bad.foreach { sql =>
+      val fn = sql.stripPrefix("select ").takeWhile(_ != '(')
       val e = intercept[org.apache.spark.sql.AnalysisException] {
         spark.sql(sql).collect()
       }
       assert(e.getCondition == "USER_RAISED_EXCEPTION",
         s"$sql raised ${e.getCondition}: ${e.getMessage}")
-      assert(e.getMessage.contains("ngram_hashes"))
+      assert(e.getMessage.contains(fn))
     }
   }
 }

@@ -14,7 +14,6 @@ class PolyHashSpec extends AnyFunSuite {
   }
 
   test("codegen path matches the reference fold") {
-    PolyHash.register(spark)
     val inputs = Seq("", "a", "abc", "the quick brown fox", "ü-umlaut", "x" * 5000)
     val got = inputs.toDF("s")
       .selectExpr("polyhash(s) AS ph").collect().map(_.getLong(0)).toSeq
@@ -22,13 +21,11 @@ class PolyHashSpec extends AnyFunSuite {
   }
 
   test("null input yields null") {
-    PolyHash.register(spark)
     val row = Seq(Option.empty[String]).toDF("s").selectExpr("polyhash(s)").collect()(0)
     assert(row.isNullAt(0))
   }
 
   test("property: engine value equals scala fold for random ascii strings") {
-    PolyHash.register(spark)
     val rnd = new scala.util.Random(42)
     val ss = List.fill(200)(
       List.fill(rnd.nextInt(300))((32 + rnd.nextInt(95)).toChar).mkString)
@@ -37,7 +34,6 @@ class PolyHashSpec extends AnyFunSuite {
   }
 
   test("rejects non-string input at analysis") {
-    PolyHash.register(spark)
     val e = intercept[Exception] {
       Seq(1).toDF("n").selectExpr("polyhash(n)").collect()
     }

@@ -175,8 +175,7 @@ class Round10OpsSpec extends AnyFunSuite {
 
   test("s19: hybrid kNN graph recall@5 >= 0.7 and strictly above s14's") {
     import spark.implicits._
-    import graft.functions.EngineFns.{dot, micro, registerAll}
-    registerAll(spark)
+    import graft.functions.EngineFns.{dot, micro}
     import org.apache.spark.sql.execution.joins.CartesianProductExec
     val hybrid = graft.SparkEntry.queries("s19_knn_graph_hybrid")(spark, sf)
     assert(physical(hybrid).collect { case c: CartesianProductExec => c }.isEmpty,

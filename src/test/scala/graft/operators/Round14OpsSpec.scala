@@ -158,7 +158,6 @@ class Round14OpsSpec extends AnyFunSuite {
   test("t28: the native sliding-minimum selection equals a brute-force " +
       "winnowing oracle, and short documents yield no fingerprints") {
     import spark.implicits._
-    graft.functions.WinnowHash60.register(spark)
     val texts = Seq(words("a", 30), words("b", 9),
       words("c", 8), words("d", 7), "")
     val got = texts.toDF("text")

@@ -48,7 +48,6 @@ class Round6OpsSpec extends AnyFunSuite {
   test("d12: learned-cell blocking is sound and keeps useful recall vs all-pairs") {
     import spark.implicits._
     import graft.functions.EngineFns._
-    registerAll(spark)
     val got = graft.SparkEntry.queries("d12_cosine_dup_kmeans")(spark, sf)
       .select($"i", $"j").as[(Long, Long)].collect().toSet
     // brute-force ground truth: every pair with cos >= 0.35 (500 vectors

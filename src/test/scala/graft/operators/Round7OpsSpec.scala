@@ -95,7 +95,6 @@ class Round7OpsSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"),
       s"hot-shingle marking should broadcast the hot set:\n$plan")
     // ground truth from a naive single semi-join over the same shingles
-    graft.functions.NgramHash60.register(spark)
     val sh = docsDf.select($"doc_id", explode(expr("ngram_hashes(text, 8)")).as("h"))
     val dup = sh.groupBy($"h").agg(count(lit(1)).as("n")).filter($"n" >= 2).select($"h")
     val naive = sh.join(dup, Seq("h"), "left_semi")

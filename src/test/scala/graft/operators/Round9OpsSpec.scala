@@ -369,8 +369,7 @@ class Round9OpsSpec extends AnyFunSuite {
     // true recall@5 vs the exact graph (the corpus is near-uniform —
     // LSH's worst case — so the floor is deliberately modest; 4 bands
     // measure ~0.44 here at ~23% of the all-pairs scoring cost)
-    import graft.functions.EngineFns.{dot, micro, registerAll}
-    registerAll(spark)
+    import graft.functions.EngineFns.{dot, micro}
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))

@@ -281,7 +281,6 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming ingest filter: quality gate + compiled decontamination, stateless") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.expr
-    graft.functions.NgramHash60.register(spark)
     // the "benchmark" text whose 8-gram shingles must not leak into the
     // accepted corpus
     val benchText = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
