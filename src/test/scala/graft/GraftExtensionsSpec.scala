@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import graft.functions.TrigramHash60
 
@@ -66,8 +66,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("SQL-resolved trigram_hashes matches the directly built " +
-      "TrigramHash60 expression") {
+  test("injected trigram_hashes matches the temp-registered expression") {
     import spark.implicits._
     val text = "the quick brown fox jumps"
     val df = Seq(text).toDF("text").selectExpr("trigram_hashes(text) AS g")
@@ -76,9 +75,19 @@ class GraftExtensionsSpec extends AnyFunSuite {
     })
     val attr = df.queryExecution.analyzed.children.head.output.head
     assert(resolved == Seq(TrigramHash60(attr)))
+    val injected = df.collect()(0).getSeq[Long](0)
+    assert(injected.length == 3)
+    // the same expression registered as a session temp function, in a
+    // child session so the shared session's registry is left untouched
+    val child = spark.newSession()
+    child.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "trigram_hashes_temp",
+      (exprs: Seq[Expression]) => TrigramHash60(exprs.head), "scala_udf")
+    val temp = child.sql(s"SELECT trigram_hashes_temp('$text') AS g")
+      .collect()(0).getSeq[Long](0)
+    assert(injected.sorted == temp.sorted)
     val direct = TrigramHash60(Literal(text)).eval()
       .asInstanceOf[ArrayData].toLongArray().toSeq
-    assert(direct.length == 3)
-    assert(df.collect()(0).getSeq[Long](0).sorted == direct.sorted)
+    assert(injected.sorted == direct.sorted)
   }
 }
