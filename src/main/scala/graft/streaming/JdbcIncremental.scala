@@ -17,16 +17,27 @@ import graft.sources.{GraftDerbyDialect, Introspection, SqlDialect, SyncConf}
   */
 object JdbcIncremental {
 
+  /** One poll's increment.
+    * @param df      a single uncached JDBC read of (last mark, `newMark`];
+    *                every action on it reads the source again, so a caller
+    *                that reads it twice pays for two source reads
+    * @param newMark the greatest watermark past the last mark, or `None`
+    *                if there were no new rows
+    * @param rows    the rows in (last mark, `newMark`], counted by the mark
+    *                probe in the same statement as its `MAX` */
   final case class Increment(df: DataFrame, newMark: Option[Long], rows: Long)
 
   /** One poll: rows with `lastMark` < `watermarkCol` <= the reported
-    * mark (numeric marks). The mark comes first, from a driver-side MAX
-    * on the source, and bounds the read above: a row committed after
-    * the probe belongs to the next poll, so it is applied once, and a
-    * re-read of `df` (say, after its cache is evicted) returns the same
-    * `rows`. Both bounds are pushed into the source-side query, so the
-    * database does the filtering — each poll's cost is proportional to
-    * the new rows, not the table. */
+    * mark (numeric marks). The mark and the row count come first, from
+    * one driver-side `SELECT MAX, COUNT(*)` on the source, and the mark
+    * bounds the read above: a row committed after the probe belongs to
+    * the next poll, so it is applied once, and a read of `df` returns
+    * the `rows` rows the probe counted, unless one of them is updated or
+    * deleted in between (an update re-stamps the row past the mark, so
+    * the next poll applies it). Both bounds are pushed into the
+    * source-side query, so the database does the filtering — each
+    * poll's cost is proportional to the new rows, not the table. A poll
+    * starts no Spark job. */
   def poll(spark: SparkSession, conf: SyncConf, table: String,
            watermarkCol: String, lastMark: Long,
            dialect: SqlDialect): Increment = {
@@ -34,13 +45,13 @@ object JdbcIncremental {
     val q = dialect.quote(table)
     val wc = dialect.quote(watermarkCol)
     // one tiny indexed query, never a Spark job
-    val mark = Introspection.withConnection(conf.sourceUrl, conf.sourceProps) { conn =>
+    val (mark, rows) = Introspection.withConnection(conf.sourceUrl, conf.sourceProps) { conn =>
       val rs = conn.createStatement().executeQuery(
-        s"SELECT MAX($wc) FROM $q WHERE $wc > $lastMark")
+        s"SELECT MAX($wc), COUNT(*) FROM $q WHERE $wc > $lastMark")
       try {
         rs.next()
         val m = rs.getLong(1)
-        if (rs.wasNull()) None else Some(m)
+        if (rs.wasNull()) (None, 0L) else (Some(m), rs.getLong(2))
       } finally rs.close()
     }
     val upper = mark.getOrElse(lastMark)
@@ -52,19 +63,17 @@ object JdbcIncremental {
         conf.sourceProps.foreach { case (k, v) => p.setProperty(k, v) }
         p
       })
-    // cache before counting: the count and the downstream apply share
-    // one source read
-    val cached = if (mark.isDefined) df.persist() else df
-    Increment(cached, mark, if (mark.isEmpty) 0L else cached.count())
+    Increment(df, mark, rows)
   }
 
   /** Poll-and-apply: ship one increment into the target via the keyed
-    * upsert sink. Returns the advanced mark (unchanged if no new rows). */
+    * upsert sink, which reads it once. Returns the advanced mark
+    * (unchanged if no new rows). */
   def syncIncrement(spark: SparkSession, conf: SyncConf, table: String,
                     watermarkCol: String, keyCols: Seq[String], lastMark: Long,
                     dialect: SqlDialect): Long = {
     val inc = poll(spark, conf, table, watermarkCol, lastMark, dialect)
-    try inc.newMark match {
+    inc.newMark match {
       case Some(m) =>
         // watermark doubles as the version column: within one increment
         // the greatest mark per key wins
@@ -72,6 +81,6 @@ object JdbcIncremental {
           orderCol = Some(watermarkCol))(inc.df, m)
         m
       case None => lastMark
-    } finally inc.df.unpersist()
+    }
   }
 }
