@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.connector.catalog.CatalogPlugin
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Loader for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -9,12 +15,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (sf0.001 smoke → sf0.1 bench → a real 100 TB lake: the path is the only
   * thing that changes; the plans are declarative and partition-parallel).
   *
-  * Every read hands the reader the table's parquet schema from a
-  * per-session cache ([[schemaOf]]). Inferring a schema is one Spark job
-  * per table, and [[registerViews]] reads all ten tables for every
-  * SQL-frontend query: without the cache, 10 of h09's 21 jobs per run
-  * were schema jobs, and building its DataFrame took ≈1160 of its
-  * ≈1750 ms (sf0.01, `local[2]`, 4-core VM).
+  * Every read is a fresh `LogicalRelation` over a parquet relation that
+  * is resolved once per session and file version ([[SessionCache]]).
+  * Resolving a table infers its schema (one Spark job), lists the file,
+  * looks the format up and copies the Hadoop conf, and [[registerViews]]
+  * reads all ten tables for every SQL-frontend query. Without a schema
+  * cache, 10 of h09's 21 jobs per run were schema jobs and building its
+  * DataFrame took ≈1160 of its ≈1750 ms; with the schema cached but the
+  * relation resolved on every read, the build still took ≈150 ms, ≈30 ms
+  * with the relation cached (sf0.01, `local[2]`, 4-core VM).
   */
 object Tables {
   import org.apache.spark.sql.functions._
@@ -82,38 +91,85 @@ object Tables {
     * path, its length and modification time, and the session's explicitly
     * set confs whose name mentions parquet (they steer how a footer maps
     * to Spark types, e.g. `spark.sql.legacy.parquet.nanosAsLong`). */
-  private final case class SchemaKey(path: String, length: Long,
-                                     modified: Long, confs: Map[String, String])
+  private[Tables] final case class FileKey(path: String, length: Long,
+                                           modified: Long, confs: Map[String, String])
 
-  /** Inferred schemas per session. Per session, not JVM-wide: sessions
-    * differ in the confs inference depends on (a `newSession()` starts
-    * from the SparkContext's confs, not its parent's runtime settings). Weak keys let a dropped session's
-    * entries go with it. */
-  private val schemas = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]]())
+  /** A view [[registerViews]] registered: the relation it reads and the
+    * plan the session catalog stored for it. */
+  private[Tables] final case class Registered(relation: BaseRelation, plan: LogicalPlan)
 
-  /** The schema `spark.read.parquet(path)` would infer, inferred once per
+  /** One session's resolved relations (one file version per path) and the
+    * views [[registerViews]] registered in it.
+    *
+    * A cached `HadoopFsRelation` holds its session, so a JVM-wide map
+    * keyed on sessions would keep every session it ever served reachable.
+    * This class is instead a catalog plugin: Spark builds one instance
+    * per session and catalog name, held only by that session's catalog
+    * manager, so the cache lives and dies with its session. It lists no
+    * tables; the plugin interface is only its way to be session-owned. */
+  final class SessionCache extends CatalogPlugin {
+    private var catalogName = ""
+    override def initialize(name: String, options: CaseInsensitiveStringMap): Unit =
+      catalogName = name
+    override def name(): String = catalogName
+    private[Tables] val relations =
+      new ConcurrentHashMap[String, (FileKey, BaseRelation)]()
+    private[Tables] val views = new ConcurrentHashMap[String, Registered]()
+  }
+
+  private val CacheCatalog = "graft_tables"
+
+  private def cacheOf(spark: SparkSession): SessionCache = {
+    val conf = s"spark.sql.catalog.$CacheCatalog"
+    if (spark.conf.getOption(conf).isEmpty)
+      spark.conf.set(conf, classOf[SessionCache].getName)
+    // the catalog manager reads a plugin's conf from the thread's active
+    // session, which need not be this one
+    val active = SparkSession.getActiveSession
+    SparkSession.setActiveSession(spark)
+    try spark.sessionState.catalogManager.catalog(CacheCatalog)
+      .asInstanceOf[SessionCache]
+    finally active.fold(SparkSession.clearActiveSession())(
+      SparkSession.setActiveSession)
+  }
+
+  /** The relation `spark.read.parquet(path)` resolves, resolved once per
     * session and file version (one Hadoop `getFileStatus` per call keys
-    * it). Overwriting the file changes its length or modification time,
-    * so the next read infers again. A directory (a multi-file dataset) is
+    * it). Resolving lists the file, looks the format up and infers the
+    * schema (one Spark job): most of a query's driver time when the SQL
+    * frontend reads all ten tables per query.
+    * Overwriting the file changes its length or modification time, so
+    * the next read resolves again. A directory (a multi-file dataset) is
     * not cached: its own status does not change when a file inside it is
     * rewritten. */
-  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+  private def relation(spark: SparkSession, path: String): BaseRelation = {
+    def resolve(): BaseRelation = spark.read.parquet(path).queryExecution
+      .analyzed.collectFirst { case r: LogicalRelation => r.relation }.get
     val p = new org.apache.hadoop.fs.Path(path)
     val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(p)
-    if (!st.isFile) return spark.read.parquet(path).schema
-    val key = SchemaKey(st.getPath.toString, st.getLen, st.getModificationTime,
+    if (!st.isFile) return resolve()
+    val key = FileKey(st.getPath.toString, st.getLen, st.getModificationTime,
       spark.conf.getAll.filter(_._1.contains("parquet")))
-    schemas.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]())
-      .computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    cacheOf(spark).relations.compute(key.path, (_, cached) =>
+      if (cached != null && cached._1 == key) cached else (key, resolve()))._2
   }
+
+  /** The schema `spark.read.parquet(path)` would infer, from the cached
+    * relation. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType =
+    relation(spark, path).schema
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val raw = spark.read.schema(schemaOf(spark, path)).parquet(path)
+    frame(spark, relation(spark, path), name, path)
+  }
+
+  /** A fresh `LogicalRelation` (fresh attribute ids, so two reads of one
+    * table in one query self-join correctly) over the shared relation. */
+  private def frame(spark: SparkSession, rel: BaseRelation, name: String,
+                    path: String): DataFrame = {
+    val raw = spark.baseRelationToDataFrame(rel)
     val df =
       if (leaveAlone(name)) raw
       else restoreParallelism(spark, raw, path)
@@ -132,8 +188,23 @@ object Tables {
   }
 
   /** Register every table as a temp view (for spark.sql / SQL tests).
-    * Re-registered on every call, never once per session: a view built
-    * earlier would keep an older file listing after the inputs change. */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
+    * A view is registered again only if its file version changed (a new
+    * relation) or the view no longer holds the plan this method stored
+    * (a caller replaced or dropped it); otherwise the call leaves it as it
+    * is and starts no Spark job. */
+  def registerViews(spark: SparkSession, sfDir: String): Unit = {
+    val registered = cacheOf(spark).views
+    val catalog = spark.sessionState.catalog
+    def stored(n: String) = catalog.getRawTempView(n).flatMap(_.plan)
+    all.foreach { n =>
+      val path = s"$sfDir/$n.parquet"
+      val rel = relation(spark, path)
+      val last = registered.get(n)
+      if (last == null || !(last.relation eq rel) ||
+          !stored(n).exists(_ eq last.plan)) {
+        frame(spark, rel, n, path).createOrReplaceTempView(n)
+        registered.put(n, Registered(rel, stored(n).get))
+      }
+    }
+  }
 }

@@ -2518,17 +2518,15 @@ object RelationalOps {
 
   def q47KCore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val edges = q47Edges(spark, dir)
-    val (e2, nv) = {
-      val r = edges.agg(count(lit(1)).as("e2"),
-        count_distinct($"u").as("v")).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val k = (7L * e2) / (10L * nv)
-    q47KCoreFrom(edges, k)
+    q47KCoreOf(q47Edges(spark, dir), None, DriverPeelBound)
       .transform(withOneRow(_, q47TruncCount(spark, dir)))
       .orderBy($"p_partkey")
   }
+
+  /** q47's k from the symmetric edge rows and their distinct first
+    * endpoints: 7/10 of the mean degree, floored. */
+  private def q47K(edgeRows: Long, nodes: Long): Long =
+    (7L * edgeRows) / (10L * nodes)
 
   /** Symmetric-edge-row bound under which the whole peel runs as a
     * driver-side simulation over ONE bounded collect —
@@ -2558,7 +2556,15 @@ object RelationalOps {
     * `driverBound` is parameterized ONLY so the spec can force the
     * superstep arm on a planted graph (componentsFrom's discipline). */
   private[operators] def q47KCoreFrom(edges: DataFrame, k: Long,
-      driverBound: Int = DriverPeelBound): DataFrame = {
+      driverBound: Int = DriverPeelBound): DataFrame =
+    q47KCoreOf(edges, Some(k), driverBound)
+
+  /** [[q47KCoreFrom]] with k either fixed or, when `fixedK` is None,
+    * derived by [[q47K]] from the graph itself: from the probe on the
+    * driver arm, which holds every edge row, and from one aggregate over
+    * the edges on the superstep arm. */
+  private def q47KCoreOf(edges: DataFrame, fixedK: Option[Long],
+      driverBound: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // Size probe + small-graph fast path in one pass (componentsFrom's
@@ -2569,7 +2575,11 @@ object RelationalOps {
     val probe = edges.limit(driverBound + 1)
       .select(col(ec(0)).cast("long"), col(ec(1)).cast("long"))
       .as[(Long, Long)].collect()
-    if (probe.length <= driverBound) return driverKCore(spark, probe, k)
+    if (probe.length <= driverBound) return driverKCore(spark, probe, fixedK)
+    val k = fixedK.getOrElse {
+      val r = edges.agg(count(lit(1)), count_distinct($"u")).head()
+      q47K(r.getLong(0), r.getLong(1))
+    }
     var alive = edges.groupBy($"u").agg(count(lit(1)).as("d"))
       .select($"u".as("n"), $"d")
       .localCheckpoint(eager = false)
@@ -2633,7 +2643,7 @@ object RelationalOps {
     * killing at [[Q47MaxRounds]] steps throws the loop's exact
     * non-convergence error. */
   private def driverKCore(spark: SparkSession, rows: Array[(Long, Long)],
-      k: Long): DataFrame = {
+      fixedK: Option[Long]): DataFrame = {
     import spark.implicits._
     // CSR adjacency over the rows, grouped by first endpoint
     java.util.Arrays.sort(rows, Ordering.by((t: (Long, Long)) => t._1))
@@ -2648,6 +2658,7 @@ object RelationalOps {
       i += 1
     }
     val ids = java.util.Arrays.copyOf(ids0, n)
+    val k = fixedK.getOrElse(q47K(m, n))
     val start = new Array[Int](n + 1) // CSR offsets into rows
     val deg = new Array[Long](n)
     i = 0
@@ -2703,8 +2714,8 @@ object RelationalOps {
     }
     org.slf4j.LoggerFactory.getLogger(getClass).info(
       s"q47KCore: driver peel over $m edge rows, $n nodes, $rounds rounds")
+    // ids ascend, so the rows are already in p_partkey order
     out.toSeq.toDF("p_partkey", "core_deg", "k", "rounds")
-      .orderBy($"p_partkey")
       .localCheckpoint() // same eager-checkpointed contract as the loop
   }
 

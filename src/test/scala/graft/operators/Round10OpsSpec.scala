@@ -260,4 +260,14 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(driverArm == Seq((0L, 2L, 2L, 25), (1L, 2L, 2L, 25), (2L, 2L, 2L, 25)))
     assert(run(0) == driverArm) // forced superstep loop
   }
+
+  test("q47: a driver-arm run takes k from its one edge probe") {
+    // 7 jobs; 11 while k came from a separate aggregate over the edges
+    // and the driver arm sorted its already-ordered rows
+    val q47 = graft.SparkEntry.queries("q47_kcore")
+    def run(): Unit =
+      q47(spark, sf).write.format("noop").mode("overwrite").save()
+    run() // builds the standing edge table
+    assert(graft.SparkJobs.during(spark)(run()) <= 7)
+  }
 }
