@@ -18,9 +18,13 @@ import graft.sources.{GraftDerbyDialect, Introspection, SqlDialect, SyncConf}
 object JdbcIncremental {
 
   /** One poll's increment.
-    * @param df      a single uncached JDBC read of (last mark, `newMark`];
-    *                every action on it reads the source again, so a caller
-    *                that reads it twice pays for two source reads
+    * @param df      a single uncached JDBC read of (last mark, `newMark`],
+    *                declared as the one partition it is read as: the read
+    *                is one JDBC cursor, so `coalesce(1)` over it moves no
+    *                data, and it lets a keyed operator over it (the
+    *                upsert's dedup window) plan no exchange. Every action
+    *                on it reads the source again, so a caller that reads
+    *                it twice pays for two source reads
     * @param newMark the greatest watermark past the last mark, or `None`
     *                if there were no new rows
     * @param rows    the rows in (last mark, `newMark`], counted by the mark
@@ -37,7 +41,14 @@ object JdbcIncremental {
     * the next poll applies it). Both bounds are pushed into the
     * source-side query, so the database does the filtering — each
     * poll's cost is proportional to the new rows, not the table. A poll
-    * starts no Spark job. */
+    * starts no Spark job.
+    *
+    * The probe is one prepared statement with the mark as its parameter,
+    * and the read is the bounds as the one JDBC predicate over the fixed
+    * relation `(SELECT * FROM t) AS incr`: the statement texts the source
+    * compiles (the probe and Spark's schema query) are the same on every
+    * poll of a table, so a database with a statement cache compiles them
+    * once. */
   def poll(spark: SparkSession, conf: SyncConf, table: String,
            watermarkCol: String, lastMark: Long,
            dialect: SqlDialect): Increment = {
@@ -46,23 +57,23 @@ object JdbcIncremental {
     val wc = dialect.quote(watermarkCol)
     // one tiny indexed query, never a Spark job
     val (mark, rows) = Introspection.withConnection(conf.sourceUrl, conf.sourceProps) { conn =>
-      val rs = conn.createStatement().executeQuery(
-        s"SELECT MAX($wc), COUNT(*) FROM $q WHERE $wc > $lastMark")
+      val ps = conn.prepareStatement(s"SELECT MAX($wc), COUNT(*) FROM $q WHERE $wc > ?")
       try {
+        ps.setLong(1, lastMark)
+        val rs = ps.executeQuery()
         rs.next()
         val m = rs.getLong(1)
         if (rs.wasNull()) (None, 0L) else (Some(m), rs.getLong(2))
-      } finally rs.close()
+      } finally ps.close()
     }
     val upper = mark.getOrElse(lastMark)
-    val sub = s"(SELECT * FROM $q WHERE $wc > $lastMark AND $wc <= $upper) AS incr"
+    val props = new java.util.Properties()
+    conf.sourceProps.foreach { case (k, v) => props.setProperty(k, v) }
     val df = spark.read
       .option("fetchsize", conf.fetchSize.toString)
-      .jdbc(conf.sourceUrl, sub, {
-        val p = new java.util.Properties()
-        conf.sourceProps.foreach { case (k, v) => p.setProperty(k, v) }
-        p
-      })
+      .jdbc(conf.sourceUrl, s"(SELECT * FROM $q) AS incr",
+        Array(s"$wc > $lastMark AND $wc <= $upper"), props)
+      .coalesce(1)
     Increment(df, mark, rows)
   }
 

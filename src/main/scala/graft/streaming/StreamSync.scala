@@ -1,7 +1,11 @@
 package graft.streaming
 
 import java.sql.Connection
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 import graft.sources.{Introspection, SqlDialect, SyncConf}
 
 /** Incremental (CDC-ish) sync: a stream of keyed change rows is applied
@@ -30,7 +34,15 @@ object StreamSync {
     * not depend on arrival order. Without `orderCol`, rows are applied
     * as-is — correct only when the upstream guarantees at most one row
     * per key per batch (shuffle merge order is otherwise
-    * nondeterministic, so no silent "last wins" is attempted). */
+    * nondeterministic, so no silent "last wins" is attempted).
+    *
+    * The batch is applied in one SQL execution, by one Spark job whose
+    * tasks run [[ApplyPartition]] over the deduplicated rows. A batch
+    * whose plan is one partition (a [[JdbcIncremental]] increment) is
+    * deduped in place, so that job is the only one and has one task;
+    * any other batch with `orderCol` is first exchanged on the keys, in
+    * a job of its own. A row the target rejects fails its task, whose
+    * transaction rolls back, and the error surfaces here. */
   def upsertBatch(conf: SyncConf, dialect: SqlDialect, table: String,
                   keyCols: Seq[String], orderCol: Option[String] = None)
                  (batch: DataFrame, batchId: Long): Unit = {
@@ -43,7 +55,6 @@ object StreamSync {
     val insertSql = s"INSERT INTO $quotedTable (" +
       cols.map(dialect.quote).mkString(", ") + ") VALUES (" +
       cols.map(_ => "?").mkString(", ") + ")"
-    val (url, props, batchSize) = (conf.targetUrl, conf.targetProps, conf.batchSize)
     val deduped = orderCol match {
       case Some(oc) =>
         import org.apache.spark.sql.expressions.Window
@@ -55,15 +66,30 @@ object StreamSync {
           .filter(col("__rn") === 1).drop("__rn")
       case None => batch
     }
-    deduped.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.nonEmpty) Introspection.withConnection(url, props) { conn =>
+    val apply = new ApplyPartition(conf, deleteSql, insertSql, keyIdx, deduped.schema)
+    val qe = deduped.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("upsertBatch")) {
+      deduped.sparkSession.sparkContext.runJob(qe.toRdd, apply)
+    }
+  }
+
+  /** One partition's upsert transaction: the task function of
+    * [[upsertBatch]]'s job. It is a named class, not a lambda, so Spark's
+    * closure cleaner ships it as it is, without parsing any class file. */
+  private final class ApplyPartition(conf: SyncConf, deleteSql: String,
+                                     insertSql: String, keyIdx: Seq[Int],
+                                     schema: StructType)
+      extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Unit =
+      if (rows.nonEmpty) Introspection.withConnection(conf.targetUrl, conf.targetProps) { conn =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
         conn.setAutoCommit(false)
         try {
-          applyRows(conn, deleteSql, insertSql, keyIdx, rows, batchSize)
+          applyRows(conn, deleteSql, insertSql, keyIdx,
+            rows.map(r => toRow(r).asInstanceOf[Row]), conf.batchSize)
           conn.commit()
         } catch { case e: Throwable => conn.rollback(); throw e }
       }
-    }
   }
 
   private def applyRows(conn: Connection, deleteSql: String, insertSql: String,

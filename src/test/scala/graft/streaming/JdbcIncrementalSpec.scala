@@ -7,7 +7,7 @@ import graft.sources.{DerbyDialect, SyncConf}
 
 /** A poll's increment is exactly (lastMark, mark]: rows committed after
   * the mark was taken belong to the next poll, however often the
-  * increment is read. A CDC round's only Spark jobs are the upsert's. */
+  * increment is read. A CDC round's only Spark job is the upsert's. */
 class JdbcIncrementalSpec extends AnyFunSuite {
   import SharedSpark.spark
 
@@ -91,5 +91,41 @@ class JdbcIncrementalSpec extends AnyFunSuite {
     assert(after.newMark.isEmpty && after.rows == 0 && after.df.count() == 0)
     assert(rows(tgtUrl) ==
       Seq((1L, "a3", 6L), (2L, "b2", 5L), (3L, "c", 4L), (4L, "d", 7L)))
+  }
+
+  test("a CDC round is one Spark job with one task, and it lands the " +
+      "latest version of each key") {
+    val srcUrl = "jdbc:derby:memory:incronesrc;create=true"
+    val tgtUrl = "jdbc:derby:memory:incronetgt;create=true"
+    def exec(url: String)(sql: String*): Unit = {
+      val c = DriverManager.getConnection(url)
+      try { val st = c.createStatement(); sql.foreach(st.execute); st.close() }
+      finally c.close()
+    }
+    for (url <- Seq(srcUrl, tgtUrl)) {
+      try exec(url)("""DROP TABLE "ONE"""") catch { case _: java.sql.SQLException => () }
+      exec(url)("""CREATE TABLE "ONE" ("k" BIGINT NOT NULL, "v" VARCHAR(8), "seq" BIGINT NOT NULL)""")
+    }
+    // the target already holds an old version of key 2
+    exec(tgtUrl)("""INSERT INTO "ONE" VALUES (2, 'old', 0)""")
+    exec(srcUrl)("""INSERT INTO "ONE" VALUES (1, 'a', 1), (2, 'b', 2), """ +
+      """(1, 'a2', 3), (3, 'c', 4), (2, 'b2', 5), (1, 'a3', 6), (3, 'c2', 7)""")
+    val conf = SyncConf(sourceUrl = srcUrl, targetUrl = tgtUrl, database = "APP")
+    var mark = 0L
+    val (jobs, tasks) = SparkJobs.withTasks(spark) {
+      mark = JdbcIncremental.syncIncrement(spark, conf, "ONE", "seq", Seq("k"),
+        0L, DerbyDialect)
+    }
+    assert(mark == 7L)
+    assert((jobs, tasks) == ((1, 1)),
+      s"a CDC round started $jobs Spark jobs with $tasks tasks")
+    val c = DriverManager.getConnection(tgtUrl)
+    val got = try {
+      val rs = c.createStatement().executeQuery(
+        """SELECT "k", "v", "seq" FROM "ONE" ORDER BY "k"""")
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getLong(1), r.getString(2), r.getLong(3))).toList
+    } finally c.close()
+    assert(got == Seq((1L, "a3", 6L), (2L, "b2", 5L), (3L, "c2", 7L)))
   }
 }

@@ -1,8 +1,14 @@
 package graft.streaming
 
 import java.sql.{DriverManager, Timestamp}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 import graft.sources.{DerbyDialect, SyncConf}
@@ -658,6 +664,116 @@ class StreamingSpec extends AnyFunSuite {
     assert(forward == backward, "the tie's winner depends on input order")
     // the tie breaks on the non-key columns, descending
     assert(forward == List((1L, "b", 5L), (2L, "y", 2L)))
+  }
+
+  /** A fresh Derby table for the upsert specs, created by `ddl`. */
+  private def freshTable(url: String, table: String, ddl: String): Unit = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      try st.execute(s"""DROP TABLE "$table"""")
+      catch { case _: java.sql.SQLException => () }
+      st.execute(s"""CREATE TABLE "$table" ($ddl)""")
+      st.close()
+    } finally c.close()
+  }
+
+  private def idRows(url: String, sql: String): List[(Long, String)] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(sql)
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getLong(1), r.getString(2))).toList
+    } finally c.close()
+  }
+
+  /** The named SQL executions `body` runs, as the session's
+    * `QueryExecutionListener`s see them: (name, execution, failure).
+    * A `collect` before and after brackets them: the listener bus
+    * delivers events in order. `body` must run no `collect` itself. */
+  private def executionsDuring(body: => Unit)
+      : List[(String, QueryExecution, Option[Exception])] = {
+    val seen = new LinkedBlockingQueue[(String, QueryExecution, Option[Exception])]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        seen.put((name, qe, None))
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit =
+        seen.put((name, qe, Some(e)))
+    }
+    def next() = {
+      val e = seen.poll(60, TimeUnit.SECONDS)
+      assert(e != null, "no SQL execution ended within 60 s")
+      e
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.range(1).collect()
+      body
+      spark.range(1).collect()
+      while (next()._1 != "collect") {}
+      Iterator.continually(next()).takeWhile(_._1 != "collect").toList
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("upsertBatch with orderCol over a multi-partition batch: the keys' " +
+      "exchange brings a key's versions together, and only the latest lands") {
+    val url = "jdbc:derby:memory:upsmulti;create=true"
+    val conf = SyncConf(sourceUrl = url, targetUrl = url, database = "APP")
+    freshTable(url, "MULTI", "\"id\" BIGINT NOT NULL, \"v\" VARCHAR(20), \"seq\" BIGINT")
+    val batch = Seq((1L, "a", 1L), (2L, "x", 2L), (1L, "b", 3L), (1L, "c", 4L),
+      (2L, "y", 5L), (1L, "d", 6L)).toDF("id", "v", "seq").repartition(3)
+    val parts = batch.filter($"id" === 1L)
+      .select(org.apache.spark.sql.functions.spark_partition_id()).distinct().count()
+    assert(parts > 1, "the versions of key 1 sit in one partition")
+    val runs = executionsDuring {
+      StreamSync.upsertBatch(conf, DerbyDialect, "MULTI", Seq("id"),
+        Some("seq"))(batch, 0L)
+    }
+    assert(runs.size == 1 && runs.head._3.isEmpty, runs.map(r => (r._1, r._3)))
+    object plans extends AdaptiveSparkPlanHelper
+    val keyed = plans.collect(runs.head._2.executedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(keyed.nonEmpty, "a multi-partition batch was deduped without an exchange")
+    assert(idRows(url, """SELECT "id", "v" FROM "MULTI" ORDER BY "id"""") ==
+      List((1L, "d"), (2L, "y")))
+  }
+
+  test("upsertBatch: a row the target rejects fails the batch, and its " +
+      "partition's transaction rolls back") {
+    val url = "jdbc:derby:memory:upsreject;create=true"
+    val conf = SyncConf(sourceUrl = url, targetUrl = url, database = "APP")
+    freshTable(url, "REJ", "\"id\" BIGINT NOT NULL, \"v\" VARCHAR(4)")
+    val c = DriverManager.getConnection(url)
+    try c.createStatement().execute("""INSERT INTO "REJ" VALUES (1, 'old')""")
+    finally c.close()
+    // one partition: the update of key 1 and a value too long for VARCHAR(4)
+    val batch = Seq((1L, "new"), (2L, "toolong")).toDF("id", "v").coalesce(1)
+    val e = intercept[Exception] {
+      StreamSync.upsertBatch(conf, DerbyDialect, "REJ", Seq("id"))(batch, 0L)
+    }
+    val messages = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(messages.exists(_.contains("truncation")), messages.mkString(" | "))
+    assert(idRows(url, """SELECT "id", "v" FROM "REJ" ORDER BY "id"""") ==
+      List((1L, "old")), "the failed partition's delete or insert was committed")
+  }
+
+  test("upsertBatch is one successful SQL execution to a QueryExecutionListener") {
+    val url = "jdbc:derby:memory:upslisten;create=true"
+    val conf = SyncConf(sourceUrl = url, targetUrl = url, database = "APP")
+    freshTable(url, "LSN", "\"id\" BIGINT NOT NULL, \"v\" VARCHAR(20), \"seq\" BIGINT")
+    val batch = Seq((1L, "a", 1L), (1L, "b", 2L), (2L, "c", 3L)).toDF("id", "v", "seq")
+    for (oc <- Seq(Some("seq"), None, Some("seq"))) {
+      val runs = executionsDuring {
+        StreamSync.upsertBatch(conf, DerbyDialect, "LSN", Seq("id"), oc)(
+          if (oc.isEmpty) batch.filter($"seq" > 1L) else batch, 0L)
+      }
+      assert(runs.size == 1 && runs.head._3.isEmpty,
+        s"upsertBatch(orderCol = $oc) ended as executions ${runs.map(r => (r._1, r._3))}")
+    }
+    assert(idRows(url, """SELECT "id", "v" FROM "LSN" ORDER BY "id"""") ==
+      List((1L, "b"), (2L, "c")))
   }
 
   test("streaming dedup emits each event_id once across micro-batches") {
