@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -572,6 +572,35 @@ object DedupOps {
     * less than the boxed Row/HashMap form this replaced. */
   private val DriverCcBound = 1000000
 
+  /** The size probe every driver-bound graph arm shares: `df`'s rows
+    * as `T`s when it has at most `bound` of them, else None — ONE job
+    * (a limit of bound + 1 rows), so the driver holds at most bound + 1
+    * rows whatever the input's size. limit() bounds the driver memory, not
+    * the upstream work: an input over the bound is recomputed by the
+    * caller's distributed arm. Callers collect tuples of longs (`as[T]`
+    * binds a tuple's fields by column position), never generic Rows; a
+    * `(Long, Long)` is `@specialized` — one object with two primitive
+    * fields — while a wider tuple boxes each field. */
+  private[operators] def collectAtMost[T: Encoder](df: DataFrame,
+      bound: Int): Option[Array[T]] = {
+    val rows = df.limit(bound + 1).as[T].collect()
+    if (rows.length <= bound) Some(rows) else None
+  }
+
+  /** The driver arms' dense id index: `ids` sorted in place, deduped
+    * and trimmed, so index order is id order and
+    * `java.util.Arrays.binarySearch` maps an id to its index. */
+  private[operators] def sortedDistinct(ids: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(ids)
+    var n = 0
+    var i = 0
+    while (i < ids.length) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(ids, n)
+  }
+
   /** `driverBound` is parameterized ONLY so the spec can force the
     * superstep arm on a planted graph (every testbed graph is under
     * the production bound, which would otherwise leave the
@@ -580,17 +609,13 @@ object DedupOps {
       driverBound: Int = DriverCcBound): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // Size probe + small-graph fast path in one pass: limit() bounds
-    // the driver memory, not the upstream work — if the pair subtree
-    // is big the probe row count just exceeds the bound and the
-    // distributed loop below recomputes it (one extra pass, amortized
-    // against ~30 supersteps at that scale). Typed collect: specialized
-    // (Long, Long) tuples, not boxed Rows — see the heap budget above.
+    // size probe + small-graph fast path in one pass; a big pair subtree
+    // is recomputed by the loop below (one extra pass, amortized against
+    // ~30 supersteps at that scale)
     val pc = pairs.columns
-    val probe = pairs.limit(driverBound + 1)
-      .select(col(pc(0)).cast("long"), col(pc(1)).cast("long"))
-      .as[(Long, Long)].collect()
-    if (probe.length <= driverBound) return driverComponents(spark, probe)
+    val probe = collectAtMost[(Long, Long)](pairs.select(
+      col(pc(0)).cast("long"), col(pc(1)).cast("long")), driverBound)
+    if (probe.isDefined) return driverComponents(spark, probe.get)
     // Undirected graph → both directions, so one join per round
     // propagates labels both ways.
     val edges = pairs
@@ -686,17 +711,8 @@ object DedupOps {
   private def driverComponents(spark: SparkSession,
       pairs: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val ids0 = new Array[Long](pairs.length * 2)
-    var k = 0
-    pairs.foreach { case (a, b) => ids0(k) = a; ids0(k + 1) = b; k += 2 }
-    java.util.Arrays.sort(ids0)
-    var n = 0
-    var i = 0
-    while (i < ids0.length) {          // in-place dedup of the sorted ids
-      if (n == 0 || ids0(i) != ids0(n - 1)) { ids0(n) = ids0(i); n += 1 }
-      i += 1
-    }
-    val ids = java.util.Arrays.copyOf(ids0, n)
+    val ids = sortedDistinct(pairs.map(_._1) ++ pairs.map(_._2))
+    val n = ids.length
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
       var r = x
@@ -714,7 +730,7 @@ object DedupOps {
       else if (rb < ra) parent(ra) = rb
     }
     val out = new Array[(Long, Long)](n)
-    i = 0
+    var i = 0
     while (i < n) { out(i) = (ids(i), ids(find(i))); i += 1 }
     org.slf4j.LoggerFactory.getLogger(getClass).info(
       s"componentsFrom: driver union-find over ${pairs.length} pairs, $n nodes")

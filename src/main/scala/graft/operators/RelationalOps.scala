@@ -1642,11 +1642,10 @@ object RelationalOps {
       driverBound: Int = Q39DriverBound): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val probe = edges.limit(driverBound + 1)
-      .select($"u".cast("long"), $"v".cast("long"))
-      .as[(Long, Long)].collect()
-    if (probe.length <= driverBound) return q39RankDriver(spark, probe)
-    q39RankDistributed(edges)
+    DedupOps.collectAtMost[(Long, Long)](
+      edges.select($"u".cast("long"), $"v".cast("long")), driverBound)
+      .map(q39RankDriver(spark, _))
+      .getOrElse(q39RankDistributed(edges))
   }
 
   /** The small-graph arm: the exact integer recurrence on primitive
@@ -1659,22 +1658,13 @@ object RelationalOps {
   private def q39RankDriver(spark: SparkSession,
       edges: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val ids0 = new Array[Long](edges.length * 2)
-    var k = 0
-    edges.foreach { case (u, v) => ids0(k) = u; ids0(k + 1) = v; k += 2 }
-    java.util.Arrays.sort(ids0)
-    var n = 0
-    var i = 0
-    while (i < ids0.length) {
-      if (n == 0 || ids0(i) != ids0(n - 1)) { ids0(n) = ids0(i); n += 1 }
-      i += 1
-    }
-    val ids = java.util.Arrays.copyOf(ids0, n)
+    val ids = DedupOps.sortedDistinct(edges.map(_._1) ++ edges.map(_._2))
+    val n = ids.length
     val m = edges.length
     val src = new Array[Int](m)
     val dst = new Array[Int](m)
     val deg = new Array[Long](n)
-    i = 0
+    var i = 0
     edges.foreach { case (u, v) =>
       val su = java.util.Arrays.binarySearch(ids, u)
       src(i) = su
@@ -2567,15 +2557,13 @@ object RelationalOps {
       driverBound: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // Size probe + small-graph fast path in one pass (componentsFrom's
-    // shape): limit() bounds the driver memory, not the upstream work;
-    // a graph over the bound pays one extra |bound|-row pass, amortized
-    // against ~rounds × 3 jobs of superstep scheduling at that scale.
+    // size probe + small-graph fast path in one pass; a graph over the
+    // bound pays one extra |bound|-row pass, amortized against ~rounds ×
+    // 3 jobs of superstep scheduling at that scale
     val ec = edges.columns
-    val probe = edges.limit(driverBound + 1)
-      .select(col(ec(0)).cast("long"), col(ec(1)).cast("long"))
-      .as[(Long, Long)].collect()
-    if (probe.length <= driverBound) return driverKCore(spark, probe, fixedK)
+    val probe = DedupOps.collectAtMost[(Long, Long)](edges.select(
+      col(ec(0)).cast("long"), col(ec(1)).cast("long")), driverBound)
+    if (probe.isDefined) return driverKCore(spark, probe.get, fixedK)
     val k = fixedK.getOrElse {
       val r = edges.agg(count(lit(1)), count_distinct($"u")).head()
       q47K(r.getLong(0), r.getLong(1))
@@ -2649,19 +2637,12 @@ object RelationalOps {
     java.util.Arrays.sort(rows, Ordering.by((t: (Long, Long)) => t._1))
     val m = rows.length
     // dense node index = distinct sorted srcs
-    val ids0 = new Array[Long](m)
-    var n = 0
-    var i = 0
-    while (i < m) {
-      val u = rows(i)._1
-      if (n == 0 || ids0(n - 1) != u) { ids0(n) = u; n += 1 }
-      i += 1
-    }
-    val ids = java.util.Arrays.copyOf(ids0, n)
+    val ids = DedupOps.sortedDistinct(rows.map(_._1))
+    val n = ids.length
     val k = fixedK.getOrElse(q47K(m, n))
     val start = new Array[Int](n + 1) // CSR offsets into rows
     val deg = new Array[Long](n)
-    i = 0
+    var i = 0
     var ni = 0
     while (i < m) {
       while (ids(ni) != rows(i)._1) { ni += 1; start(ni) = i }
@@ -2974,18 +2955,17 @@ object RelationalOps {
     import spark.implicits._
     // Size probe + small-graph fast path (componentsFrom's shape); the
     // two bounded collects overlap (guide §2.6).
-    val (oldRows, deltaRows) = ParActions.both(
-      edOld.limit(driverBound + 1)
-        .select($"a".cast("long"), $"b".cast("long"))
-        .as[(Long, Long)].collect())(
-      delta.limit(driverBound + 1)
-        .select($"a".cast("long"), $"b".cast("long"))
-        .as[(Long, Long)].collect())
+    def probe(df: DataFrame) = DedupOps.collectAtMost[(Long, Long)](
+      df.select($"a".cast("long"), $"b".cast("long")), driverBound)
     val inIdRange = (t: (Long, Long)) =>
       t._1 >= 0 && t._1 < (1L << 31) && t._2 >= 0 && t._2 < (1L << 31)
-    if (oldRows.length + deltaRows.length <= driverBound &&
-        oldRows.forall(inIdRange) && deltaRows.forall(inIdRange))
-      return driverDeltaTriangles(spark, oldRows, deltaRows)
+    ParActions.both(probe(edOld))(probe(delta)) match {
+      case (Some(oldRows), Some(deltaRows))
+          if oldRows.length + deltaRows.length <= driverBound &&
+            oldRows.forall(inIdRange) && deltaRows.forall(inIdRange) =>
+        return driverDeltaTriangles(spark, oldRows, deltaRows)
+      case _ =>
+    }
     val edNew = edOld.unionByName(delta)
     val und = edNew.unionByName(edNew.select($"b".as("a"), $"a".as("b")))
     // probe from the smaller-degree endpoint of each delta edge
@@ -3075,15 +3055,8 @@ object RelationalOps {
     deltaRows.foreach { case (a, b) => deltaSet(i) = (a << 32) | b; i += 1 }
     java.util.Arrays.sort(deltaSet)
     // dense node index + primitive count vector (ids = distinct srcs)
-    val ids0 = new Array[Long](und.length)
-    var n = 0
-    i = 0
-    while (i < und.length) {
-      val u = und(i) >>> 32
-      if (n == 0 || ids0(n - 1) != u) { ids0(n) = u; n += 1 }
-      i += 1
-    }
-    val ids = java.util.Arrays.copyOf(ids0, n)
+    val ids = DedupOps.sortedDistinct(und.map(_ >>> 32))
+    val n = ids.length
     // The per-candidate work (binary probes over shared read-only
     // arrays) is embarrassingly parallel across delta edges, and a
     // dense day's candidate count is tens of millions (26M at sf0.1) —
@@ -3802,26 +3775,25 @@ object RelationalOps {
     * co-purchase graph — the "blast radius" question every graph
     * surface needs next to components (q49) and ranking (q39): from
     * the smallest part in the support-pruned graph, how many parts
-    * sit 1, 2, … [[Q54MaxHops]] co-purchase hops away? Output is one
+    * sit 1, 2, … [[PathMaxHops]] co-purchase hops away? Output is one
     * row per hop level (n_nodes, sum of reached part ids — the
     * deterministic digest the gate can hash) plus the family's
     * honest truncation column.
     *
-    * Two output-identical arms behind componentsFrom's probe shape:
-    * a graph whose edge list fits the driver bound runs a driver BFS
-    * (every per-round cost of the distributed loop — plan compile,
-    * 32 task launches — is pure overhead on thousands of edges; same
-    * measured-exception class, heap ≤ the componentsFrom budget by
-    * the same typed-tuple argument), and anything larger runs the
-    * frontier-expansion superstep loop: per round ONE join
-    * (frontier ⋈ edges) + distinct + anti-join against the visited
-    * set, each round's state eagerly checkpointed and the superseded
-    * round released — O(maxHops) rounds by construction, so unlike
-    * open-ended propagation the distributed arm's round count is
-    * BOUNDED regardless of graph diameter. Specs force both arms
-    * label-identical on planted and real graphs. */
-  private[operators] val Q54MaxHops = 6
-  private[operators] val Q54DriverBound = 1000000
+    * BFS within a hop budget is q55's bounded Bellman-Ford with every
+    * weight 1, so q54 runs q55's engine ([[shortestPaths]]) over the
+    * unit-weight projection of the adjacency and reports the cost as
+    * an int `hops`. The two agree round for round: at unit weight a
+    * node reached at hop h' holds cost h', which no later round can
+    * undercut, so round h's frontier — the nodes whose cost improved —
+    * holds exactly the nodes first reached at hop h, and "improved"
+    * equals "newly reached". The one cost at scale: the distributed
+    * arm's replace-the-improved step is an anti-join of the standing
+    * distances against the improved set, which at unit weight removes
+    * nothing — one extra no-op join per round, at most
+    * [[PathMaxHops]] rounds. */
+  private[operators] val PathMaxHops = 6
+  private[operators] val PathDriverBound = 1000000
 
   /** q54/q55's standing SYMMETRIC weighted co-purchase adjacency
     * (a, b, w): support-pruned pairs, both directions stored, bucketed
@@ -3832,8 +3804,8 @@ object RelationalOps {
     * verdict #3: the previous per-call `basketPairs → groupBy →
     * localCheckpoint` re-derived the graph per query and re-shuffled
     * |E| on every superstep round against a stats-less LogicalRDD).
-    * One table serves both queries — q54 drops the weight, q55 keeps
-    * it; the graph (cap, support threshold) is identical. */
+    * One table serves both queries — q54 reads it at unit weight, q55
+    * as stored; the graph (cap, support threshold) is identical. */
   private[operators] def q54Adjacency(spark: SparkSession,
                                       dir: String): DataFrame = {
     import spark.implicits._
@@ -3843,11 +3815,7 @@ object RelationalOps {
       graft.sources.LayoutOps.clearStaleLocation(spark, tTr)
       val pl = t(spark, dir, "lineitem")
         .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
-      val ed = basketPairs(pl)
-        .groupBy($"a", $"b").agg(count(lit(1)).as("w"))
-        .filter($"w" >= Q49MinSupport)
-      graft.sources.LayoutOps.writeBucketed(
-        ed.unionByName(ed.select($"b".as("a"), $"a".as("b"), $"w")),
+      graft.sources.LayoutOps.writeBucketed(basketAdjacency(pl),
         tA, "a", graft.sources.LayoutOps.stateBuckets(spark))
       truncatedBaskets(pl)
         .write.mode("overwrite").format("parquet").saveAsTable(tTr)
@@ -3862,24 +3830,9 @@ object RelationalOps {
     spark.table(graft.sources.LayoutOps.stateTable(
       "graft_state_q54_trunc", dir))
 
-  def q54ShortestPaths(spark: SparkSession, dir: String): DataFrame = {
-    val und = q54Adjacency(spark, dir).select("a", "b")
-    val dist = q54Bfs(und, Q54MaxHops, Q54DriverBound)
-    try q54Digest(dist, q54TruncCount(spark, dir))
-    finally DedupOps.unpersistCheckpointed(dist)
-  }
-
-  /** The gate-facing digest over a (id, hops) distance frame: one row
-    * per hop level, eagerly checkpointed past the caller's release. */
-  private def q54Digest(dist: DataFrame, trunc: DataFrame): DataFrame = {
-    val spark = dist.sparkSession
-    import spark.implicits._
-    dist.groupBy($"hops")
-      .agg(count(lit(1)).as("n_nodes"), sum($"id").as("sum_ids"))
-      .transform(withOneRow(_, trunc))
-      .orderBy($"hops")
-      .localCheckpoint()
-  }
+  def q54ShortestPaths(spark: SparkSession, dir: String): DataFrame =
+    q54Over(q54Adjacency(spark, dir), q54TruncCount(spark, dir),
+      PathDriverBound)
 
   /** [[q54ShortestPaths]]'s core over an arbitrary (o, p) basket frame
     * — planted-graph specs enter here; `driverBound` parameterized
@@ -3887,96 +3840,20 @@ object RelationalOps {
     * routes through [[q54Adjacency]]'s standing bucketed table
     * instead; the graph derivation is identical.) */
   private[operators] def q54From(pl: DataFrame, cap: Int = BasketItemCap,
-      driverBound: Int = Q54DriverBound): DataFrame = {
-    val spark = pl.sparkSession
-    import spark.implicits._
-    val ed = basketPairs(pl, cap)
-      .groupBy($"a", $"b").agg(count(lit(1)).as("n"))
-      .filter($"n" >= Q49MinSupport).select($"a", $"b")
-    val und = ed.unionByName(ed.select($"b".as("a"), $"a".as("b")))
-      .localCheckpoint() // feeds the probe and every BFS round — run once
-    try {
-      val dist = q54Bfs(und, Q54MaxHops, driverBound)
-      try q54Digest(dist, truncatedBaskets(pl, cap))
-      finally DedupOps.unpersistCheckpointed(dist)
-    } finally DedupOps.unpersistCheckpointed(und)
+      driverBound: Int = PathDriverBound): DataFrame = {
+    val und = basketAdjacency(pl, cap).localCheckpoint() // probe + rounds
+    try q54Over(und, truncatedBaskets(pl, cap), driverBound)
+    finally DedupOps.unpersistCheckpointed(und)
   }
 
-  /** One BFS superstep's expansion join — the frontier (tiny, hinted
-    * shuffle-hash build side) probes the SYMMETRIC adjacency; when
-    * `und` is [[q54Adjacency]]'s bucketed scan the adjacency side
-    * plans zero exchange (only the frontier shuffles per round).
-    * Exposed so the plan guard can prove exactly that. */
-  private[operators] def q54Round(und: DataFrame,
-                                  frontier: DataFrame): DataFrame = {
-    import und.sparkSession.implicits._
-    frontier.select($"id".as("a")).hint("shuffle_hash")
-      .join(und, Seq("a"))
-      .select($"b".as("id")).distinct()
-  }
-
-  /** (id, hops) for every node within `maxHops` of the graph's
-    * minimum node, over a SYMMETRIC (a, b) adjacency frame (every
-    * undirected edge stored in both directions — the standing-table
-    * orientation); result is eagerly checkpointed (caller releases). */
-  private def q54Bfs(und: DataFrame, maxHops: Int,
-                     driverBound: Int): DataFrame = {
-    val spark = und.sparkSession
-    import spark.implicits._
-    // size probe + small-graph fast path in one pass (componentsFrom's
-    // shape: limit bounds the driver memory, not the upstream work)
-    val probe = und.limit(driverBound + 1)
-      .select($"a".cast("long"), $"b".cast("long"))
-      .as[(Long, Long)].collect()
-    if (probe.length <= driverBound) {
-      if (probe.isEmpty)
-        return Seq.empty[(Long, Int)].toDF("id", "hops").localCheckpoint()
-      val adj = new scala.collection.mutable.HashMap[
-        Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      // symmetric input: each direction arrives as its own row
-      probe.foreach { case (a, b) =>
-        adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer()) += b
-      }
-      val src = probe.iterator.map(_._1).min // symmetric ⇒ min(a) is global min
-      val hops = scala.collection.mutable.HashMap(src -> 0)
-      var frontier = List(src)
-      var h = 0
-      while (h < maxHops && frontier.nonEmpty) {
-        h += 1
-        frontier = frontier.flatMap(adj(_))
-          .filter(n => !hops.contains(n))
-          .distinct
-        frontier.foreach(hops.update(_, h))
-      }
-      return hops.toSeq.toDF("id", "hops").localCheckpoint()
-    }
-    // superstep arm: bounded frontier expansion
-    val src = und.agg(min($"a")).first().getLong(0)
-    var visited = Seq((src, 0)).toDF("id", "hops").localCheckpoint()
-    var frontier = visited
-    var h = 0
-    var halt = false
-    while (h < maxHops && !halt) {
-      h += 1
-      val next = q54Round(und, frontier)
-        .join(visited, Seq("id"), "left_anti")
-        .select($"id", lit(h).as("hops"))
-        .localCheckpoint()
-      if (frontier ne visited) DedupOps.unpersistCheckpointed(frontier)
-      if (next.isEmpty) {
-        DedupOps.unpersistCheckpointed(next)
-        frontier = visited
-        halt = true
-      } else {
-        val nv = visited.unionByName(next).localCheckpoint()
-        DedupOps.unpersistCheckpointed(visited)
-        visited = nv
-        frontier = next
-      }
-    }
-    if (frontier ne visited) DedupOps.unpersistCheckpointed(frontier)
-    visited
-  }
+  /** q54 over a weighted adjacency: [[shortestPaths]] at unit weight,
+    * its cost column read as the hop count. */
+  private def q54Over(und: DataFrame, trunc: DataFrame,
+                      driverBound: Int): DataFrame =
+    shortestPaths(und.select(col("a"), col("b"), lit(1L).as("w")), trunc,
+        driverBound)
+      .withColumn("cost", col("cost").cast("int"))
+      .withColumnRenamed("cost", "hops")
 
   val q54ShortestPathsSql: String =
     s"""WITH RECURSIVE $basketPlSql,
@@ -3994,7 +3871,7 @@ object RelationalOps {
       |  UNION
       |  SELECT e.v AS id, w.hops + 1 AS hops
       |  FROM walk w JOIN edges e ON e.u = w.id
-      |  WHERE w.hops < $Q54MaxHops),
+      |  WHERE w.hops < $PathMaxHops),
       |dist AS (SELECT id, MIN(hops) AS hops FROM walk GROUP BY id)
       |SELECT hops, CAST(COUNT(*) AS BIGINT) AS n_nodes,
       |  CAST(SUM(id) AS BIGINT) AS sum_ids, trunc.truncated_baskets
@@ -4006,7 +3883,7 @@ object RelationalOps {
   /** Bounded-hop WEIGHTED shortest paths — q54's BFS generalized to
     * integer edge costs (the co-purchase support count as the cost):
     * from the smallest part in the support-pruned graph, the cheapest
-    * total cost reachable within [[Q55MaxHops]] edges, per node,
+    * total cost reachable within [[PathMaxHops]] edges, per node,
     * digested as one row per distinct cost (n_nodes, sum of ids) plus
     * the family's truncation column. Where BFS relaxes by hop count,
     * this relaxes by accumulated weight — the classic bounded
@@ -4014,40 +3891,10 @@ object RelationalOps {
     * cost over paths of ≤ h edges, so a cheaper-but-longer path keeps
     * winning rounds until the hop budget ends (the behavior the spec
     * plants), and round count is BOUNDED by the hop budget regardless
-    * of graph diameter — never open-ended propagation.
-    *
-    * Two output-identical arms behind q54's probe shape: edge lists
-    * within the driver bound run the relaxation loop on the driver
-    * (hash-map adjacency, exactly the distributed update rule);
-    * anything larger runs the superstep loop — per round ONE join
-    * (frontier ⋈ edges) + a min-aggregate + an improvement anti-filter
-    * against the standing distances, each round's state eagerly
-    * checkpointed and the superseded round released. Only IMPROVED
-    * nodes re-enter the frontier, so per-round work tracks the
-    * shrinking improvement set, not |V|. Exact integer arithmetic end
-    * to end, so the DuckDB recursive-CTE oracle hash-matches. */
-  private[operators] val Q55MaxHops = 6
-  private[operators] val Q55DriverBound = 1000000
-
-  def q55WeightedPaths(spark: SparkSession, dir: String): DataFrame = {
-    val und = q54Adjacency(spark, dir) // shared standing graph, w kept
-    val dist = q55BellmanFord(und, Q55MaxHops, Q55DriverBound)
-    try q55Digest(dist, q54TruncCount(spark, dir))
-    finally DedupOps.unpersistCheckpointed(dist)
-  }
-
-  /** The gate-facing digest over a (id, cost) distance frame: one row
-    * per distinct cost, eagerly checkpointed past the caller's
-    * release. */
-  private def q55Digest(dist: DataFrame, trunc: DataFrame): DataFrame = {
-    val spark = dist.sparkSession
-    import spark.implicits._
-    dist.groupBy($"cost")
-      .agg(count(lit(1)).as("n_nodes"), sum($"id").as("sum_ids"))
-      .transform(withOneRow(_, trunc))
-      .orderBy($"cost")
-      .localCheckpoint()
-  }
+    * of graph diameter — never open-ended propagation. */
+  def q55WeightedPaths(spark: SparkSession, dir: String): DataFrame =
+    shortestPaths(q54Adjacency(spark, dir), q54TruncCount(spark, dir),
+      PathDriverBound)
 
   /** [[q55WeightedPaths]]'s core over an arbitrary (o, p) basket frame
     * — planted-graph specs enter here; `driverBound` parameterized
@@ -4055,19 +3902,36 @@ object RelationalOps {
     * routes through [[q54Adjacency]]'s standing bucketed table
     * instead; the graph derivation is identical.) */
   private[operators] def q55From(pl: DataFrame, cap: Int = BasketItemCap,
-      driverBound: Int = Q55DriverBound): DataFrame = {
-    val spark = pl.sparkSession
-    import spark.implicits._
+      driverBound: Int = PathDriverBound): DataFrame = {
+    val und = basketAdjacency(pl, cap).localCheckpoint() // probe + rounds
+    try shortestPaths(und, truncatedBaskets(pl, cap), driverBound)
+    finally DedupOps.unpersistCheckpointed(und)
+  }
+
+  /** The co-purchase graph of an (o, p) basket frame as q54/q55 read
+    * it: support-pruned pairs weighted by their support, both
+    * directions stored — the symmetric (a, b, w) adjacency. */
+  private def basketAdjacency(pl: DataFrame,
+                              cap: Int = BasketItemCap): DataFrame = {
+    import pl.sparkSession.implicits._
     val ed = basketPairs(pl, cap)
       .groupBy($"a", $"b").agg(count(lit(1)).as("w"))
       .filter($"w" >= Q49MinSupport)
-    val und = ed.unionByName(ed.select($"b".as("a"), $"a".as("b"), $"w"))
-      .localCheckpoint() // feeds the probe and every relax round — run once
-    try {
-      val dist = q55BellmanFord(und, Q55MaxHops, driverBound)
-      try q55Digest(dist, truncatedBaskets(pl, cap))
-      finally DedupOps.unpersistCheckpointed(dist)
-    } finally DedupOps.unpersistCheckpointed(und)
+    ed.unionByName(ed.select($"b".as("a"), $"a".as("b"), $"w"))
+  }
+
+  /** The path engine's gate-facing digest over a SYMMETRIC (a, b, w)
+    * adjacency: [[q55BellmanFord]]'s distances as one row per distinct
+    * cost, eagerly checkpointed past the distances' release. */
+  private def shortestPaths(und: DataFrame, trunc: DataFrame,
+                            driverBound: Int): DataFrame = {
+    val dist = q55BellmanFord(und, PathMaxHops, driverBound)
+    try dist.groupBy(col("cost"))
+      .agg(count(lit(1)).as("n_nodes"), sum(col("id")).as("sum_ids"))
+      .transform(withOneRow(_, trunc))
+      .orderBy(col("cost"))
+      .localCheckpoint()
+    finally DedupOps.unpersistCheckpointed(dist)
   }
 
   /** One Bellman-Ford superstep's relaxation join — the frontier
@@ -4088,25 +3952,44 @@ object RelationalOps {
   /** (id, cost) = exact min path cost within `maxHops` edges of the
     * graph's minimum node, over a SYMMETRIC (a, b, w) weighted
     * adjacency frame (both directions stored — the standing-table
-    * orientation); result is eagerly checkpointed (caller releases). */
+    * orientation); result is eagerly checkpointed (caller releases).
+    *
+    * Two output-identical arms behind one bounded probe
+    * ([[DedupOps.collectAtMost]]): edge lists within the driver bound
+    * run the relaxation loop on the driver, exactly the distributed
+    * update rule; anything larger runs the superstep loop — per round
+    * ONE join (frontier ⋈ edges) + a min-aggregate + an improvement
+    * filter against the standing distances, each round's state
+    * eagerly checkpointed and the superseded round released. Only
+    * IMPROVED nodes re-enter the frontier, so per-round work tracks
+    * the shrinking improvement set, not |V|. Exact integer arithmetic
+    * end to end, so the DuckDB recursive-CTE oracle hash-matches.
+    *
+    * The driver arm's state is boxed, not primitive: the probe holds
+    * one unspecialized `Tuple3` of three boxed Longs per edge row, the
+    * adjacency is a `HashMap[Long, ArrayBuffer[(Long, Long)]]` (a boxed
+    * key per node, a tuple object per directed edge), and the
+    * distances a `HashMap[Long, Long]` of boxed entries — several
+    * objects per edge where componentsFrom's arm holds primitive
+    * arrays. */
   private def q55BellmanFord(und: DataFrame, maxHops: Int,
                              driverBound: Int): DataFrame = {
     val spark = und.sparkSession
     import spark.implicits._
-    val probe = und.limit(driverBound + 1)
-      .select($"a".cast("long"), $"b".cast("long"), $"w".cast("long"))
-      .as[(Long, Long, Long)].collect()
-    if (probe.length <= driverBound) {
-      if (probe.isEmpty)
+    val probe = DedupOps.collectAtMost[(Long, Long, Long)](und.select(
+      $"a".cast("long"), $"b".cast("long"), $"w".cast("long")), driverBound)
+    if (probe.isDefined) {
+      val edges = probe.get
+      if (edges.isEmpty)
         return Seq.empty[(Long, Long)].toDF("id", "cost").localCheckpoint()
       val adj = new scala.collection.mutable.HashMap[
         Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
       // symmetric input: each direction arrives as its own row
-      probe.foreach { case (a, b, w) =>
+      edges.foreach { case (a, b, w) =>
         adj.getOrElseUpdate(a,
           scala.collection.mutable.ArrayBuffer()) += ((b, w))
       }
-      val src = probe.iterator.map(_._1).min // symmetric ⇒ min(a) is global min
+      val src = edges.iterator.map(_._1).min // symmetric ⇒ min(a) is global min
       val dist = scala.collection.mutable.HashMap(src -> 0L)
       var frontier = List(src)
       var h = 0
@@ -4175,7 +4058,7 @@ object RelationalOps {
       |  UNION
       |  SELECT e.v AS id, w.hops + 1 AS hops, w.cost + e.w AS cost
       |  FROM walk w JOIN edges e ON e.u = w.id
-      |  WHERE w.hops < $Q55MaxHops),
+      |  WHERE w.hops < $PathMaxHops),
       |dist AS (SELECT id, MIN(cost) AS cost FROM walk GROUP BY id)
       |SELECT cost, CAST(COUNT(*) AS BIGINT) AS n_nodes,
       |  CAST(SUM(id) AS BIGINT) AS sum_ids, trunc.truncated_baskets

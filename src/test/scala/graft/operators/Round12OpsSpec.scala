@@ -260,37 +260,6 @@ class Round12OpsSpec extends AnyFunSuite {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
 
-  test("q54: driver arm equals the superstep arm; planted chain gives " +
-       "the exact hop profile") {
-    import spark.implicits._
-    // chain 1-2-…-9 (each edge planted with support 2 via two 2-item
-    // baskets) plus a disconnected pair (10, 11): from src = 1, nodes
-    // 2..7 sit at hops 1..6, 8/9 are beyond the bound, 10/11 unreachable
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
-      (6L, 7L), (7L, 8L), (8L, 9L), (10L, 11L))
-    val pl = edges.zipWithIndex.flatMap { case ((a, b), i) =>
-      Seq((i * 2 + 1000L, a), (i * 2 + 1000L, b),
-          (i * 2 + 1001L, a), (i * 2 + 1001L, b))
-    }.toDF("o", "p")
-    def rows(df: DataFrame) = df.collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSeq
-    val driver = rows(RelationalOps.q54From(pl))
-    val superstep = rows(RelationalOps.q54From(pl, driverBound = 0))
-    assert(driver == (0 to 6).map(h => (h, 1L, (h + 1).toLong, 0L)),
-      s"hop profile wrong: $driver")
-    assert(driver == superstep, "the two BFS arms diverged")
-  }
-
-  test("q54: both arms agree on the real co-purchase graph") {
-    import spark.implicits._
-    val pl = graft.Tables(spark, sf, "lineitem")
-      .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
-    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
-    assert(rows(RelationalOps.q54From(pl)) ==
-      rows(RelationalOps.q54From(pl, driverBound = 0)))
-  }
-
   test("q53: rollup is ONE aggregation pass — one Expand, all dims " +
        "broadcast, one agg shuffle") {
     val df = RelationalOps.q53RollupReport(spark, sf)

@@ -4,14 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-14 specs: q54/q55 routed through the standing bucketed
-  * adjacency (r13 verdict #3) — each superstep round's frontier⋈edges
-  * join must plan ZERO exchange on the |E|-sized standing side, and
-  * the standing-table arms must stay output-identical to the
-  * from-scratch cores the planted specs pin. */
+/** Round-14 specs: q63's skyline layers, t28's winnowing and e30's
+  * decay. */
 class Round14OpsSpec extends AnyFunSuite {
   import graft.SharedSpark._
 
@@ -22,38 +18,6 @@ class Round14OpsSpec extends AnyFunSuite {
     }
 
   private def digest(df: DataFrame) = df.collect().map(_.toSeq).toSeq
-
-  test("q54/q55: a superstep round over the standing adjacency is " +
-      "shuffle-hash with the bucketed edges side exchange-free") {
-    import spark.implicits._
-    val und = RelationalOps.q54Adjacency(spark, sf)
-    val f54 = Seq(1L).toDF("id")
-    val f55 = Seq((1L, 0L)).toDF("id", "cost")
-    for ((round, name) <- Seq(
-        (RelationalOps.q54Round(und.select("a", "b"), f54), "q54"),
-        (RelationalOps.q55Round(und, f55), "q55"))) {
-      val shjs = physical(round).collect { case j: ShuffledHashJoinExec => j }
-      assert(shjs.size == 1,
-        s"$name: expected one shuffle-hash superstep join, got " +
-          s"${shjs.size}:\n${physical(round)}")
-      val clean = shjs.forall(j => Seq(j.left, j.right).exists(s =>
-        s.toString.contains("graft_state_q54_adj") &&
-          !s.toString.contains("Exchange")))
-      assert(clean,
-        s"$name: standing adjacency side is not exchange-free:\n${shjs.head}")
-    }
-  }
-
-  test("q54/q55: standing-table arms are output-identical to the " +
-      "from-scratch cores on the real table") {
-    import spark.implicits._
-    val pl = graft.Tables(spark, sf, "lineitem")
-      .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
-    assert(digest(RelationalOps.q54ShortestPaths(spark, sf)) ==
-      digest(RelationalOps.q54From(pl)))
-    assert(digest(RelationalOps.q55WeightedPaths(spark, sf)) ==
-      digest(RelationalOps.q55From(pl)))
-  }
 
   // ----------------------------------------------------- q63 skyline
 
