@@ -1197,8 +1197,9 @@ object DedupOps {
     * every CTE of the s6 k-means (seed draw, φ, oversample coin,
     * weights, init, one Lloyd round) re-keyed by cell with the same
     * `:hot<cell>`/`:hotc<cell>` salts, then the radix path-code
-    * reassignment `(cell+1)·100 + subIndex` — so the engine's driver
-    * loop and the oracle's grouped windows must agree cell by cell,
+    * reassignment `(cell+1)·100 + subIndex` — so the engine's grouped
+    * trainer ([[SimilarityOps.trainCells]], one call per refinement
+    * level) and the oracle's grouped windows must agree cell by cell,
     * member by member. Single-assignment blocking (vs d12's top-2):
     * the refinement demo wants a PARTITION, and the output carries the
     * refined cell id to pin the id scheme cross-engine. */

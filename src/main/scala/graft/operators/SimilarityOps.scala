@@ -466,19 +466,7 @@ object SimilarityOps {
   private def s5AdcScored(spark: SparkSession, dir: String)
       : (DataFrame, Seq[(Long, Array[Double], Double)]) = {
     import spark.implicits._
-    val SUBS = 8
-    val SD = 8
     val NPROBE = 4
-    // driver twins of the engine folds (left fold, seed 0.0 — exact)
-    def dotA(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }; s
-    }
-    def sqdA(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }; s
-    }
-    def microL(x: Double): Long = math.floor(x * 1000000.0).toLong
     val e = emb(spark, dir)
       .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))
@@ -493,47 +481,34 @@ object SimilarityOps {
       case (l, rs) => l -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray
     }
     val labels = cent.keys.toSeq.sorted
-    val cnrm: Map[Long, Double] = cent.map { case (l, c) => l -> math.sqrt(dotA(c, c)) }
-    val codebook: Map[(Long, Int), Array[Double]] = for {
-      (l, c) <- cent; m <- 0 until SUBS
-    } yield (l, m) -> c.slice(m * SD, m * SD + SD)
+    val cnrm: Map[Long, Double] = cent.map { case (l, c) => l -> math.sqrt(dotArr(c, c)) }
+    // the PQ codebooks: per subspace m, every label's 8-dim median slice
+    val codebook: Map[Int, Seq[(Long, Array[Double])]] = (0 until PqSubs).map { m =>
+      m -> labels.map(l => l -> cent(l).slice(m * PqSd, m * PqSd + PqSd))
+    }.toMap
     // query side: tiny by construction (s1's broadcast-q rationale)
-    val qs: Seq[(Long, Array[Double])] = e.filter($"vec_id" < NQUERIES)
-      .select($"vec_id", $"v").collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+    val qs = queryVecs(e)
     // probes: NPROBE nearest cells per query, inverted to cell → queries
-    val probesOf: Map[Long, Seq[Long]] = qs.flatMap { case (qid, qv) =>
-      val qn = math.sqrt(dotA(qv, qv))
-      labels.map(l => (dotA(qv, cent(l)) / (qn * cnrm(l)), l))
+    val probes: Map[Long, Seq[Long]] = qs.flatMap { case (qid, qv) =>
+      val qn = math.sqrt(dotArr(qv, qv))
+      labels.map(l => (dotArr(qv, cent(l)) / (qn * cnrm(l)), l))
         .sortBy { case (csim, l) => (-csim, l) }
         .take(NPROBE).map { case (_, cell) => (cell, qid) }
     }.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).sorted }
-    // ADC lookup table, fixed-point: (qid, m, code) → micro(sqd)
-    val lut: Map[String, Long] = (for {
-      (qid, qv) <- qs; m <- 0 until SUBS; l <- labels
-    } yield s"$qid:$m:$l" -> microL(sqdA(qv.slice(m * SD, m * SD + SD),
-      codebook((l, m))))).toMap
     // the one corpus pass: cell + codes are argmin projections over the
     // literal codebooks (array_min over (key, label) structs = min_by)
     val cellExpr = array_min(array(labels.map(l => struct(
       (dot($"v", typedLit(cent(l))) / ($"nrm" * lit(cnrm(l)))) * lit(-1.0),
       lit(l).as("label"))): _*)).getField("label")
-    def codeExpr(m: Int): Column = array_min(array(labels.map(l => struct(
-      aggregate(zip_with(slice($"v", m * SD + 1, SD), typedLit(codebook((l, m))),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x),
-      lit(l).as("label"))): _*)).getField("label")
-    val adcExpr = (0 until SUBS).map(m => element_at(typedLit(lut),
-      concat_ws(":", $"qid", lit(m), col(s"c$m")))).reduce(_ + _)
     val cands = e.select($"vec_id".as("nid"), $"v", $"nrm")
       .withColumn("cell", cellExpr)
-      .select(Seq($"nid", $"cell") ++
-        (0 until SUBS).map(m => codeExpr(m).as(s"c$m")): _*)
+      .select(Seq($"nid", $"cell") ++ pqCodes($"v", codebook): _*)
       // vectors in cells no query probes vanish here, map-side
-      .withColumn("qid", explode(element_at(typedLit(probesOf), $"cell")))
+      .withColumn("qid", explode(element_at(typedLit(probes), $"cell")))
       .filter($"qid" =!= $"nid")
-      .withColumn("adc_micro", adcExpr)
+      .withColumn("adc_micro", adcExpr(qs, codebook))
       .select($"qid", $"nid", $"adc_micro")
-    (cands, qs.map { case (qid, qv) => (qid, qv, math.sqrt(dotA(qv, qv))) })
+    (cands, qs.map { case (qid, qv) => (qid, qv, math.sqrt(dotArr(qv, qv))) })
   }
 
   /** Oracle CTE prefix shared by s5 and s8: the whole pipeline through
@@ -782,6 +757,8 @@ object SimilarityOps {
     var s = 0.0; var i = 0
     while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }; s
   }
+  /** Driver twin of the engine's floor-micro fixed-point projection. */
+  private def microL(x: Double): Long = math.floor(x * 1000000.0).toLong
   /** Squared L2 distance from an array column to a literal centroid —
     * the engine twin of the oracle's list_reduce(list_zip(...)) left
     * fold (seeded 0.0; exact parity per EngineFns). */
@@ -809,14 +786,117 @@ object SimilarityOps {
       struct(sqdToCol(vcol, c).as("d2"), lit(id).as("cid")) }: _*)), 1, n),
       s => s.getField("cid"))
 
-  /** Label-free k-means codebook over (vec_id, v) — deterministic and
-    * engine-exact (see [[s6KnnKmeans]] for the full rationale):
-    * hash-derandomized k-means||-style init (seed draw, one
-    * d²-proportional oversample round with an md5 coin, weighted
-    * reduction to `k`), then `iters` Lloyd iterations where each step
-    * is one argmin map pass plus one hash aggregate of exact
-    * floor-micro coordinate sums — order-independent integers, one
-    * double divide per coordinate. */
+  /** A per-key constant compiled into one branch expression,
+    * `coalesce(when(key === k, f(k)), …)` over `ks` — how the grouped
+    * trainer and the Lloyd step bake one literal codebook per group
+    * (hot cell, PQ subspace) into a single frame-wide pass. Fine for
+    * the few groups they serve. */
+  private def perKey[K](key: Column, ks: Seq[K])(f: K => Column): Column =
+    coalesce(ks.map(k => when(key === k, f(k))): _*)
+
+  /** md5 of `vec_id` with salt columns appended — the engine's
+    * deterministic draw hash (`concat(vec_id, salt…)`). */
+  private def vecHash(salt: Column*): Column =
+    md5Long(concat(col("vec_id").cast("string") +: salt: _*))
+
+  /** ONE exact Lloyd step, grouped on `key`: each row of `x` is
+    * assigned to the argmin centroid of its group's literal codebook
+    * (one map pass — no shuffle carries a vector), then one hash
+    * aggregate sums floor-micro coordinates per (key, centroid, dim).
+    * Integer sums are order-independent, so each new centroid — one
+    * double divide of two exact integers per coordinate — is
+    * bit-identical across engines and runs. A centroid that loses all
+    * members drops out. Returns per key the new codebook sorted by
+    * centroid id. */
+  private def lloydStep[K: Ordering](x: DataFrame, key: String, vec: String,
+      books: Map[K, Seq[(Long, Array[Double])]])
+      : Map[K, Seq[(Long, Array[Double])]] = {
+    import x.sparkSession.implicits._
+    val cid = perKey(col(key), books.keys.toSeq.sorted)(k => argminOver(col(vec), books(k)))
+    // cid gets its own projection: in one select with the generator,
+    // Spark 4.1 drops the argmin struct's field names (FIELD_NOT_FOUND)
+    x.withColumn("cid", cid)
+      .select(col(key), $"cid", posexplode(col(vec)).as(Seq("d0", "dv")))
+      .groupBy(col(key), $"cid", ($"d0" + 1).as("d"))
+      .agg(sum(floor(lit(1000000.0) * $"dv").cast("long")).as("s"),
+           count(lit(1)).as("n"))
+      .collect().groupBy(_.getAs[K](0)).map { case (k, rs) =>
+        k -> rs.groupBy(_.getLong(1)).map { case (c, rs2) =>
+          c -> rs2.sortBy(_.getInt(2))
+            .map(r => r.getLong(3).toDouble / (r.getLong(4).toDouble * 1000000.0))
+            .toArray
+        }.toSeq.sortBy(_._1)
+      }
+  }
+
+  /** The ONE k-means trainer: a deterministic, engine-exact codebook
+    * of up to `k` centroids per `cell` of `x(cell, vec_id, v)`, each
+    * trained on that cell's members only (see [[s6KnnKmeans]] for the
+    * rationale). Hash-derandomized k-means||-style init — seed draw
+    * (min (`seedHash`, vec_id) per cell), φ (exact floor-micro d² sum
+    * to the seed), one d²-proportional oversample round with the
+    * `coinHash` coin, candidates weighted by their nearest-assignment
+    * cell sizes and reduced greedily to `k` by (weight desc, id) — then
+    * `iters` [[lloydStep]] rounds. Every step is ONE frame-wide pass
+    * keyed by cell, never a per-cell driver loop (a loop of per-cell
+    * trainings was measured 13 s at sf0.1 where every top-level cell is
+    * hot): 4 + `iters` driver actions however many cells train, with
+    * the per-cell constants compiled by [[perKey]]. Cells are
+    * independent, so one cell trained alone gets the codebook it gets
+    * here; [[kmeansCentroids]] is the one-cell case. */
+  private[operators] def trainCells(x: DataFrame, k: Int, iters: Int,
+                                    seedHash: Column, coinHash: Column)
+      : Map[Long, Seq[(Long, Array[Double])]] = {
+    import x.sparkSession.implicits._
+    // L·2^60: the oversampling factor L = 2k scaled to the 60-bit coin
+    val coin = 2.0 * k * math.pow(2.0, 60)
+    val seeds: Map[Long, (Long, Array[Double])] = x
+      .withColumn("h", seedHash)
+      .groupBy($"cell")
+      .agg(min_by(struct($"vec_id", $"v"), struct($"h", $"vec_id")).as("s"))
+      .select($"cell", $"s.vec_id", $"s.v").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Double](2).toArray))
+      .toMap
+    def perCell(f: Long => Column): Column = perKey($"cell", seeds.keys.toSeq.sorted)(f)
+    val d2m = floor(lit(1000000.0) *
+      perCell(c => sqdToCol($"v", seeds(c)._2))).cast("long")
+    val phis: Map[Long, Long] = x.withColumn("d2m", d2m)
+      .groupBy($"cell").agg(sum($"d2m").as("p"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // d²-proportional oversample, md5-coin-derandomized
+    val cands: Map[Long, Seq[(Long, Array[Double])]] = x
+      .withColumn("d2m", d2m)
+      .filter(coinHash.cast("double") * perCell(c => lit(phis(c).toDouble))
+          < lit(coin) * $"d2m".cast("double")
+        || $"vec_id" === perCell(c => lit(seeds(c)._1)))
+      .select($"cell", $"vec_id", $"v").collect()
+      .groupBy(_.getLong(0)).map { case (c, rs) =>
+        c -> rs.map(r => r.getLong(1) -> r.getSeq[Double](2).toArray)
+          .toSeq.sortBy(_._1)
+      }
+    // candidate weights: nearest-candidate cell sizes
+    val wts: Map[Long, Map[Long, Long]] = x
+      .withColumn("cid", perCell(c => argminOver($"v", cands(c))))
+      .groupBy($"cell", $"cid").agg(count(lit(1)).as("n"))
+      .collect().groupBy(_.getLong(0)).map { case (c, rs) =>
+        c -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap
+      }
+    val init: Map[Long, Seq[(Long, Array[Double])]] = cands.map {
+      case (c, cand) =>
+        c -> cand.flatMap { case (id, cv) =>
+            wts.getOrElse(c, Map.empty).get(id).map(n => (id, cv, n)) }
+          .sortBy { case (id, _, n) => (-n, id) }
+          .take(k).map { case (id, cv, _) => (id, cv) }.sortBy(_._1)
+    }
+    (0 until iters).foldLeft(init)((books, _) => lloydStep(x, "cell", "v", books))
+  }
+
+  /** Label-free k-means codebook over (vec_id, v): [[trainCells]] on
+    * one literal cell, its draw hashes `concat(vec_id, salt)`. One
+    * cell gives the per-corpus answer because `min_by` over
+    * (h, vec_id) picks the row `ORDER BY h, vec_id LIMIT 1` picks
+    * (the oracle's seed draw), and every later step is the same
+    * arithmetic in the same order. */
   private[operators] def kmeansCentroids(e: DataFrame, k: Int = 10, iters: Int = 2,
                               saltSeed: String = ":s6",
                               saltCoin: String = ":s6c")
@@ -832,51 +912,15 @@ object SimilarityOps {
     // s6 2.03 → 1.98 s, both against a HOT child anchor 1.37–1.46 vs
     // the 1.1 band): the 4+iters downstream actions read blocks
     // instead of re-running scan+cast+md5 each. Lazy is safe HERE
-    // because the first action is a global TakeOrdered (the seed
-    // draw), which computes every partition — no partial-materialize
-    // hazard — and the stats-less LogicalRDD costs nothing because
-    // every consumer is a collect-terminated aggregate, never a join.
+    // because the first action is an aggregate over every row (the
+    // seed draw's min_by), which computes every partition — no
+    // partial-materialize hazard — and the stats-less LogicalRDD costs
+    // nothing because every consumer is a collect-terminated
+    // aggregate, never a join.
     val e0 = e.select($"vec_id", $"v").localCheckpoint(eager = false)
-    try {
-      // L·2^60: the oversampling factor L = 2k scaled to the 60-bit coin
-      val coin = 2.0 * k * math.pow(2.0, 60)
-      val seed = e0
-        .withColumn("h", md5Long(concat($"vec_id".cast("string"), lit(saltSeed))))
-        .orderBy($"h", $"vec_id").limit(1).collect()(0)
-      val seedId = seed.getLong(0)
-      val seedV = seed.getSeq[Double](1).toArray
-      val d2m = floor(lit(1000000.0) * sqdToCol($"v", seedV)).cast("long")
-      val phi = e0.select(sum(d2m).as("p")).as[Long].head()
-      val coinH = md5Long(concat($"vec_id".cast("string"), lit(saltCoin)))
-      val cand: Seq[(Long, Array[Double])] = e0.filter(
-          coinH.cast("double") * lit(phi.toDouble) < lit(coin) * d2m.cast("double")
-            || $"vec_id" === seedId)
-        .select($"vec_id", $"v").collect().toSeq
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-      // weight candidates by their nearest-assignment cell size, keep k
-      val wts = e0.withColumn("cid", argminOver($"v", cand))
-        .groupBy($"cid").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      var cents: Seq[(Long, Array[Double])] = cand
-        .flatMap { case (id, c) => wts.get(id).map(n => (id, c, n)) }
-        .sortBy { case (id, _, n) => (-n, id) }
-        .take(k).map { case (id, c, _) => (id, c) }.sortBy(_._1)
-      // Lloyd: argmin map pass + exact integer sums per (cluster, dim)
-      for (_ <- 0 until iters) {
-        val sums = e0.withColumn("cid", argminOver($"v", cents))
-          .select($"cid", posexplode($"v").as(Seq("d0", "dv")))
-          .groupBy($"cid", ($"d0" + 1).as("d"))
-          .agg(sum(floor(lit(1000000.0) * $"dv").cast("long")).as("s"),
-               count(lit(1)).as("n"))
-          .collect()
-        cents = sums.groupBy(_.getLong(0)).map { case (cid, rs) =>
-          cid -> rs.sortBy(_.getInt(1))
-            .map(r => r.getLong(2).toDouble / (r.getLong(3).toDouble * 1000000.0))
-            .toArray
-        }.toSeq.sortBy(_._1)
-      }
-      cents
-    } finally DedupOps.unpersistCheckpointed(e0)
+    try trainCells(e0.select(lit(0L).as("cell"), $"vec_id", $"v"), k, iters,
+      vecHash(lit(saltSeed)), vecHash(lit(saltCoin)))(0L)
+    finally DedupOps.unpersistCheckpointed(e0)
   }
 
   /** Recursive HOT-CELL SPLIT — the at-scale refinement d12/s6's
@@ -921,19 +965,12 @@ object SimilarityOps {
     val assigned = e.withColumn("cell0", argminOver($"v", cents))
       .withColumn("cell", element_at(typedLit(idx), $"cell0"))
       .select($"vec_id", $"v", $"cell")
-    // Every hot cell's sub-training is computed GROUPED — one frame-wide
-    // pass per training step keyed by cell, never a per-cell driver loop
-    // (the oracle's CTEs have the same grouped shape). A per-cell loop
-    // of kmeansCentroids calls was measured 13 s at sf0.1 where every
-    // top-level cell is hot: #cells × ~5 driver jobs plus a full
-    // corpus-assignment recompute per cell. Grouped, a level is SIX
-    // driver actions — census, seed, φ, oversample, weights, one Lloyd
-    // round — regardless of how many cells split. Per-cell constants
-    // (seed vector, φ, codebooks) are compiled into coalesce(when(cell
-    // === c, …)) branch expressions, fine for the few-hot-cells regime
-    // this operator exists for.
+    // Every hot cell's sub-training is ONE grouped [[trainCells]] call
+    // (salts ":hot<cell>"/":hotc<cell>", one Lloyd round), so a level
+    // is SIX driver actions — census, seed, φ, oversample, weights, one
+    // Lloyd round — regardless of how many cells split; the oracle's
+    // CTEs have the same grouped shape.
     val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val coin = 2.0 * subK * math.pow(2.0, 60)
     def loop(cur0: DataFrame, level: Int): DataFrame = {
       val cur = cur0.persist() // many separate-action consumers per level
       persisted += cur
@@ -945,69 +982,12 @@ object SimilarityOps {
         val cold = cur.join(broadcast(sizes.filter($"n" <= maxSize)
           .select($"cell")), Seq("cell"), "left_semi")
         val hm = cur.filter($"cell".isin(hot: _*))
-        def perCell(f: Long => Column): Column =
-          coalesce(hot.map(c => when($"cell" === c, f(c))): _*)
-        // per-cell salts as column expressions: ":hot<cell>"/":hotc<cell>"
-        // — identical strings to the per-cell kmeansCentroids salts
-        val hSeed = md5Long(concat($"vec_id".cast("string"), lit(":hot"),
-          $"cell".cast("string")))
-        val hCoin = md5Long(concat($"vec_id".cast("string"), lit(":hotc"),
-          $"cell".cast("string")))
-        // seed draw: min (h, vec_id) per cell
-        val seeds: Map[Long, (Long, Array[Double])] = hm
-          .withColumn("h", hSeed)
-          .groupBy($"cell")
-          .agg(min_by(struct($"vec_id", $"v"), struct($"h", $"vec_id")).as("s"))
-          .select($"cell", $"s.vec_id", $"s.v").collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Double](2).toArray))
-          .toMap
-        val d2m = floor(lit(1000000.0) *
-          perCell(c => sqdToCol($"v", seeds(c)._2))).cast("long")
-        val phis: Map[Long, Long] = hm.withColumn("d2m", d2m)
-          .groupBy($"cell").agg(sum($"d2m").as("p"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // d²-proportional oversample, md5-coin-derandomized
-        val cands: Map[Long, Seq[(Long, Array[Double])]] = hm
-          .withColumn("d2m", d2m)
-          .filter(hCoin.cast("double") * perCell(c => lit(phis(c).toDouble))
-              < lit(coin) * $"d2m".cast("double")
-            || $"vec_id" === perCell(c => lit(seeds(c)._1)))
-          .select($"cell", $"vec_id", $"v").collect()
-          .groupBy(_.getLong(0)).map { case (c, rs) =>
-            c -> rs.map(r => r.getLong(1) -> r.getSeq[Double](2).toArray)
-              .toSeq.sortBy(_._1)
-          }
-        // candidate weights: nearest-candidate cell sizes
-        val wts: Map[Long, Map[Long, Long]] = hm
-          .withColumn("cid", perCell(c => argminOver($"v", cands(c))))
-          .groupBy($"cell", $"cid").agg(count(lit(1)).as("n"))
-          .collect().groupBy(_.getLong(0)).map { case (c, rs) =>
-            c -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap
-          }
-        val inits: Map[Long, Seq[(Long, Array[Double])]] = cands.map {
-          case (c, cand) =>
-            c -> cand.flatMap { case (id, cv) =>
-                wts.getOrElse(c, Map.empty).get(id).map(n => (id, cv, n)) }
-              .sortBy { case (id, _, n) => (-n, id) }
-              .take(subK).map { case (id, cv, _) => (id, cv) }.sortBy(_._1)
-        }
-        // one Lloyd round: argmin map pass + exact integer sums
-        val subs: Map[Long, Seq[(Long, Array[Double])]] = hm
-          .withColumn("cid", perCell(c => argminOver($"v", inits(c))))
-          .select($"cell", $"cid", posexplode($"v").as(Seq("d0", "dv")))
-          .groupBy($"cell", $"cid", ($"d0" + 1).as("d"))
-          .agg(sum(floor(lit(1000000.0) * $"dv").cast("long")).as("s"),
-               count(lit(1)).as("n"))
-          .collect().groupBy(_.getLong(0)).map { case (c, rs) =>
-            c -> rs.groupBy(_.getLong(1)).map { case (cid, rs2) =>
-              cid -> rs2.sortBy(_.getInt(2))
-                .map(r => r.getLong(3).toDouble /
-                  (r.getLong(4).toDouble * 1000000.0)).toArray
-            }.toSeq.sortBy(_._1)
-          }
+        val subs = trainCells(hm, subK, 1,
+          vecHash(lit(":hot"), $"cell".cast("string")),
+          vecHash(lit(":hotc"), $"cell".cast("string")))
         // reassign to radix path codes; a degenerate sub-clustering (all
         // mass on one centroid) can't make progress — keep the cell
-        val newCell = perCell { c =>
+        val newCell = perKey($"cell", hot.toSeq) { c =>
           val sub = subs(c)
           if (sub.size < 2) lit(c)
           else {
@@ -1067,10 +1047,14 @@ object SimilarityOps {
     * folds seeded 0.0, floor-micro projections, single divides), so the
     * whole pipeline — training included — is hash-exact. φ and the
     * acceptance test are compared in doubles on BOTH engines (one
-    * multiply each side), with φ itself an exact integer sum. */
+    * multiply each side), with φ itself an exact integer sum.
+    *
+    * The training is written once: [[kmeansCentroids]] is
+    * [[trainCells]] on one cell, whose Lloyd rounds are [[lloydStep]]
+    * — the same trainer d18's and s20's per-cell splits call grouped,
+    * and the same step s7's PQ codebooks run grouped on the subspace. */
   def s6KnnKmeans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val NPROBE = 4
     // NOT persisted: the array<double> column defeats the columnar
     // cache (generic encoding for nested types — measured s6 1.7 s →
     // 2.1 s WITH a cache here; the vectorized parquet re-read is
@@ -1081,20 +1065,13 @@ object SimilarityOps {
       .withColumn("nrm", sqrt(dot($"v", $"v")))
     val cents = kmeansCentroids(e)
     // ---- serving: one corpus map pass against the compiled index
-    val qs: Seq[(Long, Array[Double])] = e.filter($"vec_id" < NQUERIES)
-      .select($"vec_id", $"v").collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    val probesOf: Map[Long, Seq[Long]] = qs.flatMap { case (qid, qv) =>
-      cents.map { case (cid, c) => (sqdArr(qv, c), cid) }
-        .sortBy { case (d2, cid) => (d2, cid) }
-        .take(NPROBE).map { case (_, cell) => (cell, qid) }
-    }.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).sorted }
+    val qs = queryVecs(e)
     val qv: Map[Long, Seq[Double]] = qs.map { case (id, a) => id -> a.toSeq }.toMap
     val qn: Map[Long, Double] = qs.map { case (id, a) => id -> math.sqrt(dotArr(a, a)) }.toMap
     val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"nid".asc)
     e.select($"vec_id".as("nid"), $"v", $"nrm")
       .withColumn("cell", argminOver($"v", cents))
-      .withColumn("qid", explode(element_at(typedLit(probesOf), $"cell")))
+      .withColumn("qid", explode(element_at(typedLit(probesOf(qs, cents)), $"cell")))
       .filter($"qid" =!= $"nid")
       .withColumn("cos",
         dot(element_at(typedLit(qv), $"qid"), $"v") /
@@ -1234,122 +1211,138 @@ object SimilarityOps {
     *    refinement matters for the 64-dim coarse quantizer, s6, not
     *    for 10 codes in 8 dimensions).
     *  - **Lloyd ×2** on the sample, all 8 subspaces in the SAME two
-    *    passes: assignment is a per-subspace argmin over literal
-    *    codebooks, recomputation one hash aggregate of exact
-    *    floor-micro sums keyed (m, code, dim) — the identical
-    *    order-independence discipline as s6, so training is hash-exact
-    *    cross-engine.
-    *  - **Serving** is s5's query-compiled single corpus pass: coarse
-    *    cell argmin, 8 code argmins, unprobed cells dropped map-side,
-    *    fixed-point ADC sums from a literal LUT; the only shuffle is
-    *    the per-query top-K. */
-  private val S7Subs = 8
-  private val S7Sd = 8
-  private val S7Kpq = 10
+    *    passes: s6's exact [[lloydStep]] grouped on the subspace `m` —
+    *    a per-subspace argmin over literal codebooks, then one hash
+    *    aggregate of exact floor-micro sums keyed (m, code, dim) — so
+    *    training is hash-exact cross-engine.
+    *  - **Serving** is the one query compiler, [[adcTopK]], over the
+    *    [[pqEncode]]d corpus: coarse cell argmin, 8 code argmins,
+    *    unprobed cells dropped map-side, fixed-point ADC sums from a
+    *    literal LUT; the only shuffle is the per-query top-K. */
+  private val PqSubs = 8 // PQ subspaces
+  private val PqSd = 8   // dims per subspace
+  private val PqK = 10   // learned codes per subspace
 
   /** s7's full label-free index training — coarse k-means codebook +
     * 8 per-subspace PQ codebooks from the md5-coin sample. Shared by
-    * [[s7KnnIvfPqKmeans]] (train + serve in one run) and [[s10KnnServe]]
-    * (train once, PERSIST, serve from the saved tables). */
+    * [[s7KnnIvfPqKmeans]] (train + serve in one run) and the saved
+    * index build ([[ensureIndex]]: s10, s11). */
   private def s7TrainCodebooks(e: DataFrame)
       : (Seq[(Long, Array[Double])], Map[Int, Seq[(Long, Array[Double])]]) = {
     val spark = e.sparkSession
     import spark.implicits._
-    val SUBS = S7Subs
-    val SD = S7Sd
-    val Kpq = S7Kpq
     // ---- PQ codebooks: per-subspace k-means on the md5-coin sample
     def trainPq(): Map[Int, Seq[(Long, Array[Double])]] = {
-      val samp = e.filter(pmod(md5Long(concat($"vec_id".cast("string"),
-        lit(":s7s"))), lit(100L)) < 50)
+      val samp = e.filter(pmod(vecHash(lit(":s7s")), lit(100L)) < 50)
       val ssub = samp.select($"vec_id",
-          explode(sequence(lit(0), lit(SUBS - 1))).as("m"), $"v")
-        .select($"vec_id", $"m", slice($"v", $"m" * SD + 1, lit(SD)).as("sv"))
+          explode(sequence(lit(0), lit(PqSubs - 1))).as("m"), $"v")
+        .select($"vec_id", $"m", slice($"v", $"m" * PqSd + 1, lit(PqSd)).as("sv"))
       val wInit = Window.partitionBy($"m").orderBy($"h", $"vec_id")
-      var codes: Map[Int, Seq[(Long, Array[Double])]] = ssub
-        .withColumn("h", md5Long(concat($"vec_id".cast("string"), lit(":s7:"),
-          $"m".cast("string"))))
+      val init: Map[Int, Seq[(Long, Array[Double])]] = ssub
+        .withColumn("h", vecHash(lit(":s7:"), $"m".cast("string")))
         .withColumn("rn", row_number().over(wInit))
-        .filter($"rn" <= Kpq)
+        .filter($"rn" <= PqK)
         .select($"m", $"vec_id", $"sv").collect()
         .groupBy(_.getInt(0)).map { case (m, rs) =>
           m -> rs.map(r => r.getLong(1) -> r.getSeq[Double](2).toArray)
             .toSeq.sortBy(_._1)
         }
-      // per-subspace argmin over the current literal codebooks
-      def codeOf(cb: Map[Int, Seq[(Long, Array[Double])]]): Column =
-        coalesce((0 until SUBS).map(m =>
-          when($"m" === m, argminOver($"sv", cb(m)))): _*)
-      for (_ <- 0 until 2) {
-        val sums = ssub.withColumn("cid", codeOf(codes))
-          .select($"m", $"cid", posexplode($"sv").as(Seq("d0", "dv")))
-          .groupBy($"m", $"cid", ($"d0" + 1).as("d"))
-          .agg(sum(floor(lit(1000000.0) * $"dv").cast("long")).as("s"),
-               count(lit(1)).as("n"))
-          .collect()
-        codes = sums.groupBy(r => (r.getInt(0), r.getLong(1))).map {
-          case ((m, cid), rs) =>
-            (m, cid) -> rs.sortBy(_.getInt(2))
-              .map(r => r.getLong(3).toDouble / (r.getLong(4).toDouble * 1000000.0))
-              .toArray
-        }.toSeq.groupBy(_._1._1).map { case (m, entries) =>
-          m -> entries.map { case ((_, cid), arr) => cid -> arr }.sortBy(_._1)
-        }
-      }
-      codes
+      (0 until 2).foldLeft(init)((books, _) => lloydStep(ssub, "m", "sv", books))
     }
     // The PQ sample training (init draw + 2 Lloyd collects) and the
-    // coarse quantizer (kmeansCentroids' 6-action spine) are
-    // data-INDEPENDENT action chains over the same input — neither
-    // reads anything the other produces — so they run CONCURRENTLY
-    // (guide §2.6 / ParActions): the PQ chain's jobs back-fill the
-    // idle capacity between the coarse chain's sequential actions.
-    // Same plans, same collects, same codebooks — only the submission
-    // order moves.
+    // coarse quantizer (kmeansCentroids: trainCells' 4 + iters actions,
+    // six here) are data-INDEPENDENT action chains over the same input
+    // — neither reads anything the other produces — so they run
+    // CONCURRENTLY (guide §2.6 / ParActions): the PQ chain's jobs
+    // back-fill the idle capacity between the coarse chain's sequential
+    // actions. Same plans, same collects, same codebooks — only the
+    // submission order moves.
     val (codes, cents) = ParActions.both(trainPq())(kmeansCentroids(e))
     (cents, codes)
   }
 
-  def s7KnnIvfPqKmeans(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  /** The corpus as `(vec_id, v: array<double>)`. */
+  private def vectors(spark: SparkSession, dir: String): DataFrame =
+    emb(spark, dir).select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+
+  /** The query side of a `(vec_id, v)` frame — the `vec_id <
+    * NQUERIES` rows, collected (tiny by construction), sorted by id. */
+  private def queryVecs(e: DataFrame): Seq[(Long, Array[Double])] =
+    e.filter(col("vec_id") < NQUERIES).select(col("vec_id"), col("v"))
+      .collect().toSeq
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
+
+  /** L2 probe lists: each query's 4 nearest coarse cells (ties on the
+    * smaller id), inverted to cell → sorted probing queries. */
+  private def probesOf(qs: Seq[(Long, Array[Double])],
+                       cents: Seq[(Long, Array[Double])]): Map[Long, Seq[Long]] = {
     val NPROBE = 4
-    val SUBS = S7Subs
-    val SD = S7Sd
-    def microL(x: Double): Long = math.floor(x * 1000000.0).toLong
-    // NOT persisted: array columns defeat the columnar cache (s6's
-    // measured anti-lesson; s7 with a cache here was 1.4 s SLOWER)
-    val e = emb(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    // the query collect is independent of training — overlap it with
-    // the training chains (guide §2.6; see s7TrainCodebooks)
-    val (qs, (cents, codes)) = ParActions.both(
-      e.filter($"vec_id" < NQUERIES)
-        .select($"vec_id", $"v").collect().toSeq
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    )(s7TrainCodebooks(e))
-    val probesOf: Map[Long, Seq[Long]] = qs.flatMap { case (qid, qv) =>
+    qs.flatMap { case (qid, qv) =>
       cents.map { case (cid, c) => (sqdArr(qv, c), cid) }
         .sortBy { case (d2, cid) => (d2, cid) }
         .take(NPROBE).map { case (_, cell) => (cell, qid) }
     }.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).sorted }
+  }
+
+  /** PQ code columns `c0..c7`: per subspace, the argmin code of the
+    * vector's 8-dim slice over that subspace's literal codebook. */
+  private def pqCodes(v: Column, codes: Map[Int, Seq[(Long, Array[Double])]])
+      : Seq[Column] =
+    (0 until PqSubs).map(m =>
+      argminOver(slice(v, m * PqSd + 1, PqSd), codes(m)).as(s"c$m"))
+
+  /** The one PQ encoder: `(vec_id, v)` → `(nid, cell, c0..c7)`, the
+    * coarse argmin cell plus the [[pqCodes]] — one map pass. */
+  private def pqEncode(x: DataFrame, cents: Seq[(Long, Array[Double])],
+                       codes: Map[Int, Seq[(Long, Array[Double])]]): DataFrame =
+    x.select(Seq(col("vec_id").as("nid"), argminOver(col("v"), cents).as("cell")) ++
+      pqCodes(col("v"), codes): _*)
+
+  /** ADC score of a row's `c0..c7` codes against its `qid`: the sum of
+    * 8 lookups into a literal LUT (qid, m, code) → floor-micro squared
+    * L2 from the query's subvector to the code — fixed-point, so the
+    * sum is an order-independent integer add. */
+  private def adcExpr(qs: Seq[(Long, Array[Double])],
+                      codes: Map[Int, Seq[(Long, Array[Double])]]): Column = {
     val lut: Map[String, Long] = (for {
-      (qid, qvec) <- qs; m <- 0 until SUBS; (cid, cv) <- codes(m)
+      (qid, qv) <- qs; m <- 0 until PqSubs; (cid, cv) <- codes(m)
     } yield s"$qid:$m:$cid" ->
-      microL(sqdArr(qvec.slice(m * SD, m * SD + SD), cv))).toMap
-    val adcExpr = (0 until SUBS).map(m => element_at(typedLit(lut),
-      concat_ws(":", $"qid", lit(m), col(s"c$m")))).reduce(_ + _)
+      microL(sqdArr(qv.slice(m * PqSd, m * PqSd + PqSd), cv))).toMap
+    (0 until PqSubs).map(m => element_at(typedLit(lut),
+      concat_ws(":", col("qid"), lit(m), col(s"c$m")))).reduce(_ + _)
+  }
+
+  /** The query compiler over an encoded index `enc(nid, cell,
+    * c0..c7)`: the probe lists and the ADC LUT are compiled for `qs`
+    * (driver-side, query-count-sized) into ONE pass that keeps only
+    * probed cells (a partition filter on a saved codes table), fans
+    * each row out to its cell's probing queries and ranks the
+    * per-query top-K by (adc_micro, nid) — the only shuffle. */
+  private def adcTopK(enc: DataFrame, qs: Seq[(Long, Array[Double])],
+                      cents: Seq[(Long, Array[Double])],
+                      codes: Map[Int, Seq[(Long, Array[Double])]]): DataFrame = {
+    val spark = enc.sparkSession
+    import spark.implicits._
+    val probes = probesOf(qs, cents)
     val w = Window.partitionBy($"qid").orderBy($"adc_micro".asc, $"nid".asc)
-    e.select($"vec_id".as("nid"), $"v")
-      .withColumn("cell", argminOver($"v", cents))
-      .select(Seq($"nid", $"cell") ++ (0 until SUBS).map(m =>
-        argminOver(slice($"v", m * SD + 1, SD), codes(m)).as(s"c$m")): _*)
-      .withColumn("qid", explode(element_at(typedLit(probesOf), $"cell")))
+    enc.filter($"cell".isin(probes.keys.toSeq.sorted: _*))
+      .withColumn("qid", explode(element_at(typedLit(probes), $"cell")))
       .filter($"qid" =!= $"nid")
-      .withColumn("adc_micro", adcExpr)
+      .withColumn("adc_micro", adcExpr(qs, codes))
       .withColumn("rnk", row_number().over(w))
       .filter($"rnk" <= K)
       .select($"qid", $"nid", $"rnk", $"adc_micro")
       .orderBy($"qid", $"rnk")
+  }
+
+  def s7KnnIvfPqKmeans(spark: SparkSession, dir: String): DataFrame = {
+    // NOT persisted: array columns defeat the columnar cache (s6's
+    // measured anti-lesson; s7 with a cache here was 1.4 s SLOWER)
+    val e = vectors(spark, dir)
+    // the query collect is independent of training — overlap it with
+    // the training chains (guide §2.6; see s7TrainCodebooks)
+    val (qs, (cents, codes)) = ParActions.both(queryVecs(e))(s7TrainCodebooks(e))
+    adcTopK(pqEncode(e, cents, codes), qs, cents, codes)
   }
 
   /** s7's oracle, parameterized by the WITH-clause header and the CTE
@@ -1465,8 +1458,9 @@ object SimilarityOps {
   // ---------------------------------------------------------------- s10
   /** s7 split into BUILD and SERVE — the build-once/serve-many shape
     * every production ANN deployment has, which s5/s7 (train + serve in
-    * one run) deliberately do not. The BUILD step (first call only)
-    * trains s7's codebooks and persists three catalog tables:
+    * one run) deliberately do not. The BUILD step (first call only,
+    * [[ensureIndex]] — s11's day 1 too) trains s7's codebooks and
+    * persists three catalog tables:
     *
     *  - `…_cent(cid, cv)` / `…_pq(m, cid, cv)` — the codebooks
     *    (metadata-sized; doubles round-trip exactly through parquet);
@@ -1474,113 +1468,97 @@ object SimilarityOps {
     *    hive-PARTITIONED BY `cell`: the partition directories ARE the
     *    IVF inverted lists, materialized as layout.
     *
-    * The SERVE step compiles the saved codebooks (collected — tiny by
-    * construction) into probe lists and the ADC LUT exactly as s7 does,
-    * then scans ONLY the probed cells: the `cell isin probes` filter
-    * resolves as PartitionFilters on the codes table, so unprobed
+    * The SERVE step reads the saved codebooks back (collected — tiny by
+    * construction) and compiles them through s7's query compiler
+    * ([[adcTopK]]: probe lists + ADC LUT), which scans ONLY the probed
+    * cells: the `cell isin probes` filter resolves as PartitionFilters
+    * on the codes table, so unprobed
     * inverted lists are never listed, let alone read — at 100 TB with
     * k ≈ 100k cells and nprobe = 4·|queries| distinct cells, the serve
     * scan touches a vanishing corpus fraction where s7's single-run
     * form re-encodes everything. No k-means job appears in the serve
-    * plan's lineage (Round7OpsSpec asserts the plan reads the codes
+    * plan's lineage (SimilaritySpec asserts the plan reads the codes
     * table and nothing else). Output (and oracle) identical to s7: the
     * saved index is a pure materialization of s7's training. */
   def s10KnnServe(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     s10EnsureIndex(spark, dir)
-    val qs: Seq[(Long, Array[Double])] = emb(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .filter($"vec_id" < NQUERIES)
-      .collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    s10ServeFrom(spark, dir, qs)
+    s10ServeFrom(spark, dir, queryVecs(vectors(spark, dir)))
   }
 
   /** Build s10's persisted index if this warehouse has none yet:
     * train, encode, write codebooks + cell-partitioned codes. The one
     * and only place k-means runs on this path — serving (batch or
     * streaming) never trains. */
-  private[graft] def s10EnsureIndex(spark: SparkSession, dir: String): Unit = {
+  private[graft] def s10EnsureIndex(spark: SparkSession, dir: String): Unit =
+    ensureIndex(spark, "s7", dir, vectors(spark, dir))
+
+  /** The catalog tables of the saved index `name`:
+    * `graft_state_<name>_{cent,pq,codes}`. */
+  private def indexTables(name: String, dir: String): (String, String, String) = {
+    def t(kind: String) =
+      graft.sources.LayoutOps.stateTable(s"graft_state_${name}_$kind", dir)
+    (t("cent"), t("pq"), t("codes"))
+  }
+
+  /** The one index build, a no-op when index `name`'s codes table
+    * exists: clear stale locations, train s7's codebooks on `train`,
+    * write the `cent(cid, cv)` and `pq(m, cid, cv)` tables and the
+    * [[pqEncode]]d `train` rows as the cell-partitioned `codes`
+    * table. */
+  private def ensureIndex(spark: SparkSession, name: String, dir: String,
+                          train: DataFrame): Unit = {
     import spark.implicits._
-    val SUBS = S7Subs
-    val SD = S7Sd
-    val centT = graft.sources.LayoutOps.stateTable("graft_state_s7_cent", dir)
-    val pqT = graft.sources.LayoutOps.stateTable("graft_state_s7_pq", dir)
-    val codesT = graft.sources.LayoutOps.stateTable("graft_state_s7_codes", dir)
-    val e = emb(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val (centT, pqT, codesT) = indexTables(name, dir)
     if (!spark.catalog.tableExists(codesT)) {
       Seq(centT, pqT, codesT)
         .foreach(graft.sources.LayoutOps.clearStaleLocation(spark, _))
-      val (cents, codes) = s7TrainCodebooks(e)
+      val (cents, codes) = s7TrainCodebooks(train)
       cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
         .write.mode("overwrite").format("parquet").saveAsTable(centT)
       codes.toSeq.flatMap { case (m, cbs) =>
         cbs.map { case (cid, cv) => (m, cid, cv.toSeq) }
       }.toDF("m", "cid", "cv")
         .write.mode("overwrite").format("parquet").saveAsTable(pqT)
-      e.withColumn("cell", argminOver($"v", cents))
-        .select(Seq($"vec_id".as("nid"), $"cell") ++ (0 until SUBS).map(m =>
-          argminOver(slice($"v", m * SD + 1, SD), codes(m)).as(s"c$m")): _*)
+      pqEncode(train, cents, codes)
         .repartition(col("cell"))
         .write.mode("overwrite").format("parquet").partitionBy("cell")
         .saveAsTable(codesT)
     }
   }
 
-  /** Serve an arbitrary query set against s10's SAVED index: compile
-    * the per-query probe list + ADC lookup table from the persisted
-    * codebooks (driver-side, query-count-sized), then one
-    * partition-pruned scan of the probed cells. Shared by the batch
-    * query (s10) and the streaming server ([[graft.streaming.StreamOps
-    * .streamingAnnServe]]), which calls it once per micro-batch — the
-    * queries are the small side of serving by definition, so
-    * collecting a micro-batch of them to the driver is the
-    * metadata-sized move, not a data-sized one. */
+  /** The one codebook reader: index `name`'s coarse codebook (sorted
+    * by cid) and its PQ codebooks (per m, sorted by cid). */
+  private def readCodebooks(spark: SparkSession, name: String, dir: String)
+      : (Seq[(Long, Array[Double])], Map[Int, Seq[(Long, Array[Double])]]) = {
+    val (centT, pqT, _) = indexTables(name, dir)
+    val cents = spark.table(centT).collect().toSeq
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
+    val codes = spark.table(pqT).collect().toSeq
+      .groupBy(_.getInt(0)).map { case (m, rs) =>
+        m -> rs.map(r => r.getLong(1) -> r.getSeq[Double](2).toArray)
+          .sortBy(_._1)
+      }
+    (cents, codes)
+  }
+
+  /** Serve an arbitrary query set against s10's SAVED index: read the
+    * persisted codebooks and compile them with the queries through
+    * [[adcTopK]] — one partition-pruned scan of the probed cells.
+    * Shared by the batch query (s10) and the streaming server
+    * ([[graft.streaming.StreamOps.streamingAnnServe]]), which calls it
+    * once per micro-batch — the queries are the small side of serving
+    * by definition, so collecting a micro-batch of them to the driver
+    * is the metadata-sized move, not a data-sized one. */
   private[graft] def s10ServeFrom(spark: SparkSession, dir: String,
       qs: Seq[(Long, Array[Double])],
       codesTable: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val NPROBE = 4
-    val SUBS = S7Subs
-    val SD = S7Sd
-    def microL(x: Double): Long = math.floor(x * 1000000.0).toLong
-    val centT = graft.sources.LayoutOps.stateTable("graft_state_s7_cent", dir)
-    val pqT = graft.sources.LayoutOps.stateTable("graft_state_s7_pq", dir)
-    val codesT = codesTable.getOrElse(
-      graft.sources.LayoutOps.stateTable("graft_state_s7_codes", dir))
     if (qs.isEmpty)
       return spark.range(0).select($"id".as("qid"), $"id".as("nid"),
         $"id".cast("int").as("rnk"), $"id".as("adc_micro"))
-    val cents: Seq[(Long, Array[Double])] = spark.table(centT).collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    val codes: Map[Int, Seq[(Long, Array[Double])]] =
-      spark.table(pqT).collect().toSeq
-        .groupBy(_.getInt(0)).map { case (m, rs) =>
-          m -> rs.map(r => r.getLong(1) -> r.getSeq[Double](2).toArray)
-            .sortBy(_._1)
-        }
-    val probesOf: Map[Long, Seq[Long]] = qs.flatMap { case (qid, qv) =>
-      cents.map { case (cid, c) => (sqdArr(qv, c), cid) }
-        .sortBy { case (d2, cid) => (d2, cid) }
-        .take(NPROBE).map { case (_, cell) => (cell, qid) }
-    }.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).sorted }
-    val lut: Map[String, Long] = (for {
-      (qid, qvec) <- qs; m <- 0 until SUBS; (cid, cv) <- codes(m)
-    } yield s"$qid:$m:$cid" ->
-      microL(sqdArr(qvec.slice(m * SD, m * SD + SD), cv))).toMap
-    val adcExpr = (0 until SUBS).map(m => element_at(typedLit(lut),
-      concat_ws(":", $"qid", lit(m), col(s"c$m")))).reduce(_ + _)
-    val w = Window.partitionBy($"qid").orderBy($"adc_micro".asc, $"nid".asc)
-    spark.table(codesT)
-      .filter($"cell".isin(probesOf.keys.toSeq.sorted: _*))
-      .withColumn("qid", explode(element_at(typedLit(probesOf), $"cell")))
-      .filter($"qid" =!= $"nid")
-      .withColumn("adc_micro", adcExpr)
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= K)
-      .select($"qid", $"nid", $"rnk", $"adc_micro")
-      .orderBy($"qid", $"rnk")
+    val (cents, codes) = readCodebooks(spark, "s7", dir)
+    adcTopK(spark.table(codesTable.getOrElse(indexTables("s7", dir)._3)),
+      qs, cents, codes)
   }
 
   // ---------------------------------------------------------------- s11
@@ -1601,7 +1579,7 @@ object SimilarityOps {
     * codes table, and serve s7-style over the combined index. At
     * 100 TB the daily cost is proportional to the batch, not the
     * corpus: the standing side is a partition-pruned scan of
-    * fixed-width code rows (Round7OpsSpec asserts no aggregate
+    * fixed-width code rows (SimilaritySpec asserts no aggregate
     * appears under the standing scan and the serve output matches the
     * first call's).
     *
@@ -1613,75 +1591,15 @@ object SimilarityOps {
     * tonight's rebuild. */
   def s11IndexUpdate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val NPROBE = 4
-    val SUBS = S7Subs
-    val SD = S7Sd
-    def microL(x: Double): Long = math.floor(x * 1000000.0).toLong
-    val centT = graft.sources.LayoutOps.stateTable("graft_state_s11_cent", dir)
-    val pqT = graft.sources.LayoutOps.stateTable("graft_state_s11_pq", dir)
-    val codesT = graft.sources.LayoutOps.stateTable("graft_state_s11_codes", dir)
-    val e = emb(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val isNew = pmod(md5Long(concat($"vec_id".cast("string"), lit(":s11"))),
-      lit(5L)) === 0L
+    val e = vectors(spark, dir)
+    val isNew = pmod(vecHash(lit(":s11")), lit(5L)) === 0L
     // ---- day 1 (first call only): train on standing, encode standing
-    if (!spark.catalog.tableExists(codesT)) {
-      Seq(centT, pqT, codesT)
-        .foreach(graft.sources.LayoutOps.clearStaleLocation(spark, _))
-      val standing = e.filter(!isNew)
-      val (cents, codes) = s7TrainCodebooks(standing)
-      cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
-        .write.mode("overwrite").format("parquet").saveAsTable(centT)
-      codes.toSeq.flatMap { case (m, cbs) =>
-        cbs.map { case (cid, cv) => (m, cid, cv.toSeq) }
-      }.toDF("m", "cid", "cv")
-        .write.mode("overwrite").format("parquet").saveAsTable(pqT)
-      standing.withColumn("cell", argminOver($"v", cents))
-        .select(Seq($"vec_id".as("nid"), $"cell") ++ (0 until SUBS).map(m =>
-          argminOver(slice($"v", m * SD + 1, SD), codes(m)).as(s"c$m")): _*)
-        .repartition(col("cell"))
-        .write.mode("overwrite").format("parquet").partitionBy("cell")
-        .saveAsTable(codesT)
-    }
+    ensureIndex(spark, "s11", dir, e.filter(!isNew))
     // ---- day 2 (every call): load codebooks, encode ONLY the batch
-    val cents: Seq[(Long, Array[Double])] = spark.table(centT).collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    val codes: Map[Int, Seq[(Long, Array[Double])]] =
-      spark.table(pqT).collect().toSeq
-        .groupBy(_.getInt(0)).map { case (m, rs) =>
-          m -> rs.map(r => r.getLong(1) -> r.getSeq[Double](2).toArray)
-            .sortBy(_._1)
-        }
-    val batchCodes = e.filter(isNew)
-      .withColumn("cell", argminOver($"v", cents))
-      .select(Seq($"vec_id".as("nid"), $"cell") ++ (0 until SUBS).map(m =>
-        argminOver(slice($"v", m * SD + 1, SD), codes(m)).as(s"c$m")): _*)
-    val qs: Seq[(Long, Array[Double])] = e.filter($"vec_id" < NQUERIES)
-      .select($"vec_id", $"v").collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    val probesOf: Map[Long, Seq[Long]] = qs.flatMap { case (qid, qv) =>
-      cents.map { case (cid, c) => (sqdArr(qv, c), cid) }
-        .sortBy { case (d2, cid) => (d2, cid) }
-        .take(NPROBE).map { case (_, cell) => (cell, qid) }
-    }.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).sorted }
-    val lut: Map[String, Long] = (for {
-      (qid, qvec) <- qs; m <- 0 until SUBS; (cid, cv) <- codes(m)
-    } yield s"$qid:$m:$cid" ->
-      microL(sqdArr(qvec.slice(m * SD, m * SD + SD), cv))).toMap
-    val adcExpr = (0 until SUBS).map(m => element_at(typedLit(lut),
-      concat_ws(":", $"qid", lit(m), col(s"c$m")))).reduce(_ + _)
-    val w = Window.partitionBy($"qid").orderBy($"adc_micro".asc, $"nid".asc)
-    val probedCells = probesOf.keys.toSeq.sorted
-    spark.table(codesT)
-      .filter($"cell".isin(probedCells: _*))
-      .unionByName(batchCodes.filter($"cell".isin(probedCells: _*)))
-      .withColumn("qid", explode(element_at(typedLit(probesOf), $"cell")))
-      .filter($"qid" =!= $"nid")
-      .withColumn("adc_micro", adcExpr)
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= K)
-      .select($"qid", $"nid", $"rnk", $"adc_micro")
-      .orderBy($"qid", $"rnk")
+    val (cents, codes) = readCodebooks(spark, "s11", dir)
+    adcTopK(spark.table(indexTables("s11", dir)._3)
+        .unionByName(pqEncode(e.filter(isNew), cents, codes)),
+      queryVecs(e), cents, codes)
   }
 
   val s11IndexUpdateSql: String = {
@@ -1972,11 +1890,7 @@ object SimilarityOps {
     s10EnsureIndex(spark, dir)
     val codesT = s16EnsureCopy(spark, dir)
     s16CompactDeletes(spark, dir)
-    val qs: Seq[(Long, Array[Double])] = emb(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .filter($"vec_id" < NQUERIES && !s16IsDeleted($"vec_id"))
-      .collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
+    val qs = queryVecs(vectors(spark, dir).filter(!s16IsDeleted($"vec_id")))
     s10ServeFrom(spark, dir, qs, codesTable = Some(codesT))
   }
 
@@ -2347,8 +2261,8 @@ object SimilarityOps {
     * item): every inverted list whose load factor exceeds
     * [[S20LoadMax]] (>1.2× the balanced ideal, the exact integer test
     * `5·n·n_cells > 6·n_total`) is SPLIT in two by a deterministic
-    * sub-k-means over ITS members only (d18's grouped hot-cell
-    * training, salted `:s20`), and ONLY those cells' partition
+    * sub-k-means over ITS members only (d18's grouped trainer,
+    * [[trainCells]], salted `:s20`), and ONLY those cells' partition
     * directories are rewritten — s16's partition-surgical pattern,
     * including its explicit-drop handling for the now-empty parent
     * directories. The codebook table is updated to match (parents out,
@@ -2447,19 +2361,22 @@ object SimilarityOps {
         $"embedding".cast("array<double>").as("v")), Seq("nid"))
       .persist()
     try {
-      val subs = s20SubCodebooks(hm.select($"cell", $"nid".as("vec_id"), $"v"))
+      // each hot cell's sub-codebook, sorted by centroid id (the
+      // oracle's sidx order); a degenerate cell (all mass on one
+      // centroid) has fewer than two entries and stays unsplit
+      val subs = trainCells(hm.select($"cell", $"nid".as("vec_id"), $"v"),
+        S20SubK, 1, vecHash(lit(":s20"), $"cell".cast("string")),
+        vecHash(lit(":s20c"), $"cell".cast("string")))
       val split = hot.filter(c => subs.getOrElse(c, Nil).size >= 2)
       if (split.isEmpty) return cents
       val dataCols = spark.table(codesT).columns.toSeq
-      def perCell(f: Long => Column): Column =
-        coalesce(split.map(c => when($"cell" === c, f(c))): _*)
       val newIdOf: Map[Long, Map[Long, Long]] = split.map { c =>
         c -> subs(c).map(_._1).zipWithIndex.map { case (id, i) =>
           id -> (base + hotIdx(c) * S20SubK + i)
         }.toMap
       }.toMap
       val reassigned = hm.filter($"cell".isin(split: _*))
-        .withColumn("__newcell", perCell(c =>
+        .withColumn("__newcell", perKey($"cell", split)(c =>
           element_at(typedLit(newIdOf(c)), argminOver($"v", subs(c)))))
         .drop("cell").withColumnRenamed("__newcell", "cell")
         .select(dataCols.map(col): _*)
@@ -2483,72 +2400,6 @@ object SimilarityOps {
           (base + hotIdx(c) * S20SubK + i, cv.toSeq)
         })
     } finally hm.unpersist(blocking = false)
-  }
-
-  /** Grouped per-cell sub-k-means over `hm(cell, vec_id, v)` —
-    * refineHotCells' six-action training with [[S20SubK]] children,
-    * one Lloyd round, and the `:s20`/`:s20c` salts. Returns each
-    * cell's sub-codebook sorted by centroid id (the oracle's sidx
-    * order); a degenerate cell (all mass on one centroid) comes back
-    * with fewer than two entries and the caller keeps it unsplit. */
-  private def s20SubCodebooks(hm: DataFrame)
-      : Map[Long, Seq[(Long, Array[Double])]] = {
-    import hm.sparkSession.implicits._
-    val coin = 2.0 * S20SubK * math.pow(2.0, 60)
-    val hSeed = md5Long(concat($"vec_id".cast("string"), lit(":s20"),
-      $"cell".cast("string")))
-    val hCoin = md5Long(concat($"vec_id".cast("string"), lit(":s20c"),
-      $"cell".cast("string")))
-    val seeds: Map[Long, (Long, Array[Double])] = hm
-      .withColumn("h", hSeed)
-      .groupBy($"cell")
-      .agg(min_by(struct($"vec_id", $"v"), struct($"h", $"vec_id")).as("s"))
-      .select($"cell", $"s.vec_id", $"s.v").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Double](2).toArray))
-      .toMap
-    def perCell(cs: Iterable[Long])(f: Long => Column): Column =
-      coalesce(cs.toSeq.map(c => when($"cell" === c, f(c))): _*)
-    val cs = seeds.keys.toSeq.sorted
-    val d2m = floor(lit(1000000.0) *
-      perCell(cs)(c => sqdToCol($"v", seeds(c)._2))).cast("long")
-    val phis: Map[Long, Long] = hm.withColumn("d2m", d2m)
-      .groupBy($"cell").agg(sum($"d2m").as("p"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cands: Map[Long, Seq[(Long, Array[Double])]] = hm
-      .withColumn("d2m", d2m)
-      .filter(hCoin.cast("double") * perCell(cs)(c => lit(phis(c).toDouble))
-          < lit(coin) * $"d2m".cast("double")
-        || $"vec_id" === perCell(cs)(c => lit(seeds(c)._1)))
-      .select($"cell", $"vec_id", $"v").collect()
-      .groupBy(_.getLong(0)).map { case (c, rs) =>
-        c -> rs.map(r => r.getLong(1) -> r.getSeq[Double](2).toArray)
-          .toSeq.sortBy(_._1)
-      }
-    val wts: Map[Long, Map[Long, Long]] = hm
-      .withColumn("cid", perCell(cs)(c => argminOver($"v", cands(c))))
-      .groupBy($"cell", $"cid").agg(count(lit(1)).as("n"))
-      .collect().groupBy(_.getLong(0)).map { case (c, rs) =>
-        c -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap
-      }
-    val inits: Map[Long, Seq[(Long, Array[Double])]] = cands.map {
-      case (c, cand) =>
-        c -> cand.flatMap { case (id, cv) =>
-            wts.getOrElse(c, Map.empty).get(id).map(n => (id, cv, n)) }
-          .sortBy { case (id, _, n) => (-n, id) }
-          .take(S20SubK).map { case (id, cv, _) => (id, cv) }.sortBy(_._1)
-    }
-    hm.withColumn("cid", perCell(cs)(c => argminOver($"v", inits(c))))
-      .select($"cell", $"cid", posexplode($"v").as(Seq("d0", "dv")))
-      .groupBy($"cell", $"cid", ($"d0" + 1).as("d"))
-      .agg(sum(floor(lit(1000000.0) * $"dv").cast("long")).as("s"),
-           count(lit(1)).as("n"))
-      .collect().groupBy(_.getLong(0)).map { case (c, rs) =>
-        c -> rs.groupBy(_.getLong(1)).map { case (cid, rs2) =>
-          cid -> rs2.sortBy(_.getInt(2))
-            .map(r => r.getLong(3).toDouble /
-              (r.getLong(4).toDouble * 1000000.0)).toArray
-        }.toSeq.sortBy(_._1)
-      }
   }
 
   val s20IndexRebalanceSql: String = {
@@ -2773,15 +2624,9 @@ object SimilarityOps {
   }
 
   def s21IndexCompact(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val codesT = s21EnsureFragmented(spark, dir)
     s21CompactCells(spark, dir)
-    val qs: Seq[(Long, Array[Double])] = emb(spark, dir)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .filter($"vec_id" < NQUERIES)
-      .collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    s10ServeFrom(spark, dir, qs, Some(codesT))
+    s10ServeFrom(spark, dir, queryVecs(vectors(spark, dir)), Some(codesT))
   }
 
   // --------------------------------------------------------------- s22

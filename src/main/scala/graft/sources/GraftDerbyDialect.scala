@@ -9,9 +9,11 @@ import org.apache.spark.sql.types._
   *
   * Spark's stock Derby mapping writes StringType as CLOB; Derby then
   * refuses `setNull(..., Types.CLOB)` against the VARCHAR columns our
-  * explicit `createTableColumnTypes` DDL declares. This dialect pins the
-  * write-side JDBC types to the same families the DDL uses — the same
-  * job the reference's per-type sink setters do (JdbcPageSink.java:112-150).
+  * own CREATE TABLE declares ([[TableSync]] runs the DDL that
+  * [[Introspection.createTableColumnTypes]] renders). This dialect pins
+  * the write-side JDBC types to the same families the DDL uses — the
+  * same job the reference's per-type sink setters do
+  * (JdbcPageSink.java:112-150).
   */
 object GraftDerbyDialect extends JdbcDialect {
   override def canHandle(url: String): Boolean =

@@ -110,10 +110,12 @@ object Introspection {
     mapped
   }
 
-  /** Target CREATE TABLE column-types fragment (Spark's
-    * `createTableColumnTypes` option) from the mapped schema — the
+  /** Target CREATE TABLE column list from the mapped schema — each
+    * name quoted by the dialect, then its native type text: the
     * reference's createTableInTarget DDL (M2H2SchemaConverter.java:75-118)
-    * with the intended type-text mapping. */
+    * with the intended type-text mapping. [[TableSync]] executes it
+    * itself (DROP + CREATE over JDBC), not through Spark's writer. */
   def createTableColumnTypes(cols: Seq[MappedColumn], dialect: SqlDialect): String =
-    cols.map(c => s"${c.name} ${dialect.ddlType(c.sparkType, c.meta)}").mkString(", ")
+    cols.map(c => s"${dialect.quote(c.name)} ${dialect.ddlType(c.sparkType, c.meta)}")
+      .mkString(", ")
 }

@@ -140,10 +140,8 @@ object TableSync {
       try {
         try st.execute(s"DROP TABLE ${dialect.quote(table)}")
         catch { case _: java.sql.SQLException => () } // no such table
-        val colDdl = cols
-          .map(c => s"${dialect.quote(c.name)} ${dialect.ddlType(c.sparkType, c.meta)}")
-          .mkString(", ")
-        st.execute(s"CREATE TABLE ${dialect.quote(table)} ($colDdl)")
+        st.execute(s"CREATE TABLE ${dialect.quote(table)} " +
+          s"(${Introspection.createTableColumnTypes(cols, dialect)})")
       } finally st.close()
     }
 

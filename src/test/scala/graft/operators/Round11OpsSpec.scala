@@ -73,85 +73,6 @@ class Round11OpsSpec extends AnyFunSuite {
     assert(out.count() == 64L)
   }
 
-  test("s20: rebalance splits only over-full lists and is surgical") {
-    import spark.implicits._
-    SimilarityOps.s10EnsureIndex(spark, sf)
-    // a private working copy of the index for this spec (s16's move)
-    val t = graft.sources.LayoutOps.stateTable("graft_state_s20spec", sf)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    graft.sources.LayoutOps.clearStaleLocation(spark, t)
-    val s7codes = graft.sources.LayoutOps.stateTable("graft_state_s7_codes", sf)
-    spark.table(s7codes).write.mode("overwrite").format("parquet")
-      .partitionBy("cell").saveAsTable(t)
-    val cents = spark.table(
-        graft.sources.LayoutOps.stateTable("graft_state_s7_cent", sf))
-      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
-
-    def filesPerCell(): Map[Long, Set[String]] =
-      spark.table(t).select($"cell", input_file_name().as("f"))
-        .distinct().collect()
-        .groupBy(_.getLong(0)).map { case (c, rs) =>
-          c -> rs.map(_.getString(1)).toSet
-        }
-    val before = filesPerCell()
-    val sizes = before.keys.map(c =>
-      c -> spark.table(t).filter($"cell" === c).count()).toMap
-    val nTotal = sizes.values.sum
-    val hot = sizes.filter { case (_, n) =>
-      5L * n * sizes.size > 6L * nTotal }.keySet
-    assert(hot.nonEmpty, "testdata has no over-full list — threshold dead")
-    assert(hot.size < sizes.size, "every list hot — nothing untouched to pin")
-
-    val newCents = SimilarityOps.s20RebalanceOn(spark, sf, t, cents)
-    val after = filesPerCell()
-    // split parents are gone (partition dropped, files and all);
-    // untouched lists keep their EXACT files
-    hot.foreach(c => assert(!after.contains(c), s"parent $c still present"))
-    before.foreach { case (c, fs) =>
-      if (!hot(c)) assert(after(c) == fs, s"untouched list $c was rewritten")
-    }
-    // children carry exactly the parent's members, nothing lost
-    assert(spark.table(t).count() == nTotal)
-    val base = cents.map(_._1).max + 1
-    val children = after.keySet -- before.keySet
-    assert(children.nonEmpty && children.forall(_ >= base))
-    // codebook updated to match the layout: one centroid per live cell
-    // of the split parents' children, parents gone
-    assert(newCents.map(_._1).toSet.intersect(hot).isEmpty)
-    assert(children.subsetOf(newCents.map(_._1).toSet))
-    // post-rebalance: every child is strictly smaller than its parent
-    val childSizes = spark.table(t).filter($"cell" >= base)
-      .groupBy($"cell").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hotSorted = hot.toSeq.sorted
-    childSizes.foreach { case (child, n) =>
-      val parent = hotSorted(((child - base) / SimilarityOps.S20SubK).toInt)
-      assert(n < sizes(parent),
-        s"child $child ($n) not smaller than parent $parent (${sizes(parent)})")
-    }
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-  }
-
-  test("s20: rebuild survives a stale cent directory with no catalog entry") {
-    SimilarityOps.s10EnsureIndex(spark, sf)
-    val centT = graft.sources.LayoutOps.stateTable("graft_state_s20_cent", sf)
-    val codesT = graft.sources.LayoutOps.stateTable("graft_state_s20_codes", sf)
-    Seq(centT, codesT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    // simulate a run killed between the codes write and the cent write,
-    // then a fresh JVM: the cent DIRECTORY survives in the warehouse but
-    // the (per-process) catalog has no entry — saveAsTable would refuse
-    // with LOCATION_ALREADY_EXISTS unless the stale location is cleared
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(centT)))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(loc, "leftover"))
-    val codes = SimilarityOps.s20EnsureRebalanced(spark, sf)
-    assert(spark.catalog.tableExists(centT))
-    assert(spark.catalog.tableExists(codes))
-    assert(spark.table(codes).count() > 0)
-  }
-
   test("t26: maintained BM25 index equals from-scratch t20, idempotently") {
     Seq("graft_state_t26_post", "graft_state_t26_dl", "graft_state_t26_df")
       .map(graft.sources.LayoutOps.stateTable(_, sf))

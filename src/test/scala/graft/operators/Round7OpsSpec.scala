@@ -2,13 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-7 operator specs: persisted standing state (day-2 incremental
-  * forms + serve-from-saved-ANN-index) and their plan-shape guarantees. */
+  * forms) and their plan-shape guarantees. */
 class Round7OpsSpec extends AnyFunSuite {
   import graft.SharedSpark._
 
@@ -188,49 +188,6 @@ class Round7OpsSpec extends AnyFunSuite {
       s"max vt ${agg.getLong(0)} != $expectedMax (overflow in the vt product)")
     assert(BigInt(n) * BigInt(1000000000000L) > BigInt(Long.MaxValue),
       "planted product must actually overflow longs")
-  }
-
-  test("s10: serve plan scans ONLY the saved index, prunes unprobed cells, joins nothing") {
-    val df = graft.SparkEntry.queries("s10_knn_serve")(spark, sf)
-    val plan = physical(df)
-    val scans = plan.collect { case s: FileSourceScanExec => s }
-    assert(scans.size == 1,
-      s"serve must scan exactly the saved codes table, got ${scans.size} scans:\n$plan")
-    assert(scans.head.toString.contains("graft_state_s7_codes"),
-      s"serve scan is not the saved index:\n${scans.head}")
-    // the `cell isin probes` filter resolves as partition pruning: the
-    // unprobed inverted lists are never listed, let alone read
-    assert(scans.head.partitionFilters.nonEmpty,
-      s"cell probe filter did not reach PartitionFilters:\n${scans.head}")
-    // no join, no k-means lineage: the codebooks were compiled to literals
-    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty,
-      s"serve plan must not join:\n$plan")
-    // and serving from the saved index reproduces s7 exactly
-    assert(df.collect().toSeq ==
-      graft.SparkEntry.queries("s7_knn_ivfpq_kmeans")(spark, sf).collect().toSeq)
-  }
-
-  test("s11: day-2 ingest encodes only the batch — no k-means lineage, standing scan pruned") {
-    val df = graft.SparkEntry.queries("s11_index_update")(spark, sf)
-    val plan = physical(df)
-    val scans = plan.collect { case s: FileSourceScanExec => s }
-    // exactly two scans: the saved standing codes + the raw batch slice
-    assert(scans.size == 2, s"want codes + batch scans, got ${scans.size}:\n$plan")
-    val codesScan = scans.filter(_.toString.contains("graft_state_s11_codes"))
-    assert(codesScan.size == 1, s"no saved-codes scan:\n$plan")
-    assert(codesScan.head.partitionFilters.nonEmpty,
-      s"probe filter did not prune the standing inverted lists:\n${codesScan.head}")
-    // encoding the batch with SAVED codebooks is pure projection: no
-    // join anywhere, and no aggregate below the union (a k-means or
-    // training aggregate in the lineage would mean a rebuild crept in)
-    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty,
-      s"day-2 serve must not join:\n$plan")
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    assert(plan.collect { case a: BaseAggregateExec => a }.isEmpty,
-      s"day-2 serve must not aggregate below the top-K:\n$plan")
-    // and a second call (same saved state) reproduces the first exactly
-    assert(df.collect().toSeq ==
-      graft.SparkEntry.queries("s11_index_update")(spark, sf).collect().toSeq)
   }
 
   test("d19: coverage is an interval UNION — overlapping dup spans never double-count") {

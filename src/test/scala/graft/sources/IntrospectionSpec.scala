@@ -97,6 +97,6 @@ class IntrospectionSpec extends AnyFunSuite {
       MappedColumn(ColumnMeta("id", Types.BIGINT, 19, 0), LongType),
       MappedColumn(ColumnMeta("name", Types.VARCHAR, 100, 0), StringType))
     assert(Introspection.createTableColumnTypes(cols, DerbyDialect) ==
-      "id bigint, name varchar(100)")
+      "\"id\" bigint, \"name\" varchar(100)")
   }
 }
